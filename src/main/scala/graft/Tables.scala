@@ -15,13 +15,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   // Memoized per (session, path): `spark.read.parquet` eagerly lists the
   // directory and reads a footer for the schema, so a 100+-query suite
-  // pays that per query per table without this. The tables are immutable
-  // test fixtures, so reusing the resolved relation is safe; entries of
-  // stopped sessions are dropped on the next lookup so neither they nor
-  // their DataFrames outlive the session in multi-session processes.
+  // pays that per query per table without this. The resolved relation
+  // holds the file listing it was opened with, so writers invalidate their
+  // entries: a directory rewritten in place goes through [[forget]] first
+  // (ServedSearch.writeSearchIndex does). Entries of stopped sessions are
+  // dropped on the next lookup so neither they nor their DataFrames outlive
+  // the session in multi-session processes.
   private val memo =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+
+  /** The engine's parquet reader: `path` opened once per session. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
     // The fixtures' timestamp columns are naive parquet micros
     // (isAdjustedToUTC = false), which Spark 4 would otherwise infer as
     // TIMESTAMP_NTZ; the engine computes in (UTC-session) TimestampType, so
@@ -29,9 +33,17 @@ object Tables {
     // so a driver-created session gets it too.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     memo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    memo.getOrElseUpdate((spark, s"$sfDir/$name.parquet"),
-      spark.read.parquet(s"$sfDir/$name.parquet"))
+    memo.getOrElseUpdate((spark, path), spark.read.parquet(path))
   }
+
+  /** Drop every memo entry at or under `dir`, in every session. */
+  def forget(dir: String): Unit = {
+    val root = dir.stripSuffix("/")
+    memo.filterInPlace { case ((_, p), _) => p != root && !p.startsWith(root + "/") }
+  }
+
+  private def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, sfDir: String): DataFrame    = read(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame    = read(spark, sfDir, "nation")

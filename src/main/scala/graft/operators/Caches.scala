@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 
 /** Deterministic release for the engine's shared cached subtrees.
   *
@@ -37,9 +38,12 @@ object Caches {
   /** Cache `df`; when a [[withScope]] is active on this thread, register
     * it for release at scope exit. Nested scopes release at the innermost
     * active scope (the registration point), matching who asked for it.
+    * A plan the CacheManager already holds is not cached again (that is a
+    * no-op which only logs "Asked to cache already cached data").
     */
   def shared(df: DataFrame): DataFrame = {
-    df.cache()
+    if (df.sparkSession.sharedState.cacheManager.lookupCachedData(castToImpl(df)).isEmpty)
+      df.cache()
     register(() => try df.unpersist(blocking = false) catch { case _: Throwable => () })
     df
   }

@@ -1045,10 +1045,12 @@ object Dedup {
     * the shared cache below never matched across calls and x45/x45c/x60/
     * x71 each re-ran LSH + components. The FORCED-distributed diagnostic
     * (`maxCollectEdges == 0`, x45b) is deliberately NOT memoized — that
-    * row exists to run the iterative propagation per call.
+    * row exists to run the iterative propagation per call. Each entry
+    * keeps the components arm that built it, so a hit restores
+    * [[Duplicates.lastComponentsPath]] as `labelsFrameMemo` does.
     */
   private val dedupFrameMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, String)]()
 
   def minhashDedup(docs: DataFrame, minEstJaccard: Double = 0.5,
                    maxBucketSize: Int = 0,
@@ -1060,13 +1062,15 @@ object Dedup {
         s"$key0|j=$minEstJaccard|b=$maxBucketSize|c=$maxCollectEdges|d=$digestFirst"
       else ""
     val hit = if (key.nonEmpty) dedupFrameMemo.get(key) else null
-    if (hit != null && (hit.sparkSession eq docs.sparkSession))
-      return Caches.shared(hit)
+    if (hit != null && (hit._1.sparkSession eq docs.sparkSession)) {
+      Duplicates.lastComponentsPath = hit._2
+      return Caches.shared(hit._1)
+    }
     val out = minhashDedupArm(docs, minEstJaccard, maxBucketSize,
       maxCollectEdges, digestFirst)
     if (key.nonEmpty) {
       if (dedupFrameMemo.size >= 8) dedupFrameMemo.clear()
-      dedupFrameMemo.put(key, out)
+      dedupFrameMemo.put(key, (out, Duplicates.lastComponentsPath))
     }
     out
   }

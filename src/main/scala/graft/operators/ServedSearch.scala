@@ -36,6 +36,14 @@ import org.apache.spark.sql.functions._
   * proportional to those words' document frequency; the hybrid probe reads
   * query-term postings plus two doc-keyed sidecars joined on the (small)
   * matched side. Nothing at probe time scans the corpus text.
+  *
+  * Probes open the index once per session: every artifact read goes
+  * through [[Tables.parquet]], so a repeat probe re-lists no bucket
+  * directory and re-reads no footer. [[writeSearchIndex]] drops the
+  * directory's entries before it writes, so an in-process rewrite is
+  * seen. Another process that rewrites an index writes it to a fresh
+  * directory (as [[Artifacts.servedDir]] does) or calls [[Tables.forget]]
+  * on it in this one.
   */
 object ServedSearch {
 
@@ -60,6 +68,7 @@ object ServedSearch {
     */
   def writeSearchIndex(docs: DataFrame, dir: String): Unit = {
     indexBuilds.incrementAndGet()
+    Tables.forget(dir)
     val counts = Caches.shared(Relevance.termCounts(docs))
     SearchIndex.positionalIndex(docs)
       .withColumn("bucket", bucketOf(col("tok")))
@@ -101,7 +110,7 @@ object ServedSearch {
   def probePhrase(spark: SparkSession, dir: String, phrase: Seq[String],
                   k: Int = 100): DataFrame = {
     require(phrase.nonEmpty, "phrase must have at least one word")
-    val idx = spark.read.parquet(s"$dir/postings")
+    val idx = Tables.parquet(spark, s"$dir/postings")
     val first = postingsOf(idx, phrase.head)
       .select(col("doc_id"), col("pos").as("p0"))
     val aligned = phrase.zipWithIndex.tail.foldLeft(first) { case (acc, (w, i)) =>
@@ -138,15 +147,15 @@ object ServedSearch {
     import spark.implicits._
     val qTerms = SemanticSearch.tokenize(query).distinct
     require(qTerms.nonEmpty, "query must tokenize to at least one term")
-    val idx = spark.read.parquet(s"$dir/postings")
+    val idx = Tables.parquet(spark, s"$dir/postings")
     val pruned = idx.where(
       qTerms.map(w => col("bucket") === bucketOf(lit(w))).reduce(_ || _) &&
         col("tok").isin(qTerms: _*))
     val counts = Caches.shared(pruned
       .groupBy(col("doc_id"), col("tok").as("token"))
       .agg(count(lit(1)).as("cnt")))
-    val docstats = spark.read.parquet(s"$dir/docstats")
-    val stats = broadcast(spark.read.parquet(s"$dir/stats"))
+    val docstats = Tables.parquet(spark, s"$dir/docstats")
+    val stats = broadcast(Tables.parquet(spark, s"$dir/stats"))
 
     // lexical arm: bm25Rank's scoring body over the artifact frames; the
     // corpus zero-padding is unnecessary here because the hybrid arm cuts
@@ -162,13 +171,16 @@ object ServedSearch {
           (col("cnt") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
           .as("s"))
       .groupBy("doc_id").agg(round(sum("s"), 6).as("bm25"))
+    // both unpartitioned windows rank <= poolK rows each (post
+    // TakeOrderedAndProject), so their single-partition exchange stays
+    // poolK rows at any corpus size
     val lexW = Window.orderBy(desc("bm25"), asc("doc_id"))
     val lex = lexScores.where(col("bm25") > 0)
       .orderBy(desc("bm25"), asc("doc_id")).limit(poolK)
       .select(col("doc_id"), row_number().over(lexW).cast("long").as("lex_rank"))
 
     // semantic arm: SemanticSearch.search's cosine over the artifact
-    val vocab = broadcast(spark.read.parquet(s"$dir/vocab"))
+    val vocab = broadcast(Tables.parquet(spark, s"$dir/vocab"))
     val qVec = broadcast(SemanticSearch.queryTf(query).toDF("token", "qtf")
       .join(vocab, "token")
       .select(col("token"), (col("qtf") * col("idf")).as("qw")))
@@ -181,12 +193,13 @@ object ServedSearch {
         (((col("cnt").cast("double") / col("max_cnt")) * col("idf")) * col("qw"))
           .as("d"))
       .groupBy("doc_id").agg(sum("d").as("dot"))
-    val sims = dots.join(spark.read.parquet(s"$dir/norms"), "doc_id")
+    val sims = dots.join(Tables.parquet(spark, s"$dir/norms"), "doc_id")
       .crossJoin(broadcast(qNorm))
       .where(col("nrm") > 0 && col("qnrm") > 0 && col("dot") > 0)
       .select(col("doc_id"),
         round(col("dot") / (col("nrm") * col("qnrm")), 6).as("similarity"))
       .where(col("similarity") >= threshold)
+    // <= poolK rows after TakeOrderedAndProject, as lexW
     val semW = Window.orderBy(desc("similarity"), asc("doc_id"))
     val sem = sims.orderBy(desc("similarity"), asc("doc_id")).limit(poolK)
       .select(col("doc_id"), row_number().over(semW).cast("long").as("sem_rank"))

@@ -229,6 +229,17 @@ class DedupGuardSpec extends SparkSpec {
       s"planted clones must all be dropped members of a ≥201 family")
   }
 
+  test("a minhashDedup memo hit reports the arm that built the frame") {
+    val docs = Tables.documents(spark, sf0001) // file-backed: memoizable
+    Dedup.minhashDedup(docs).collect()
+    assert(graft.operators.Duplicates.lastComponentsPath == "collect")
+    graft.operators.Duplicates.components(docs, maxCollectEdges = 0).collect()
+    assert(graft.operators.Duplicates.lastComponentsPath == "iterative")
+    Dedup.minhashDedup(docs).collect()
+    assert(graft.operators.Duplicates.lastComponentsPath == "collect",
+      "a memo hit must restore the arm its frame was built by")
+  }
+
   test("x45c digest-first dedup is output-identical to member-level, " +
        "capped and uncapped, and null-text docs stay kept singletons") {
     val planted = Dedup.plantedHotCorpus(Tables.documents(spark, sf0001))

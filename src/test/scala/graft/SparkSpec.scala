@@ -22,9 +22,12 @@ trait SparkSpec extends AnyFunSuite {
   val refKeywords: Seq[String] = Seq("machine learning", "deep learning", "neural network",
     "artificial intelligence", "natural language processing", "transformer", "attention")
 
-  def sampleDocs: DataFrame = {
+  def sampleDocs: DataFrame = docsOf(sampleTexts)
+
+  /** An in-memory `(doc_id, text)` corpus, doc ids 0.. in `texts` order. */
+  def docsOf(texts: Seq[String]): DataFrame = {
     import spark.implicits._
-    sampleTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
   }
 
   /** Flatten an executed plan through its AQE wrappers (final plan of an
