@@ -100,8 +100,7 @@ object Bpe {
     * memoized value is the tiny driver-side merge list (numMerges rows),
     * model-sized derived state a long-lived service holds resident.
     */
-  private val mergeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String, String, Long)]]()
+  private val mergeMemo = new Caches.Memo[Seq[(Long, String, String, Long)]](8)
 
   /** Learn `numMerges` merges; returns (rank, merge_left, merge_right,
     * pair_count) in merge order. Stops early if the corpus runs out of
@@ -110,11 +109,10 @@ object Bpe {
   def learnMerges(docs: DataFrame, numMerges: Int = 10): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val key0 = Caches.planMemoKey(docs)
-    val key = if (key0.nonEmpty) s"$key0|m=$numMerges" else ""
-    val hit = if (key.nonEmpty) mergeMemo.get(key) else null
-    if (hit != null)
-      return hit.toDF("rank", "merge_left", "merge_right", "pair_count")
+    val key = Caches.memoKey(docs, s"m=$numMerges")
+    val hit = mergeMemo.get(key)
+    if (hit.nonEmpty)
+      return hit.get.toDF("rank", "merge_left", "merge_right", "pair_count")
     var state = Caches.checkpointed(initState(wordTable(docs)))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var exhausted = false
@@ -138,11 +136,7 @@ object Bpe {
     }
     // the merge list is collected — the final symbol state can go too
     Caches.releaseCheckpoint(state)
-    if (key.nonEmpty) {
-      if (mergeMemo.size >= 8) mergeMemo.clear()
-      mergeMemo.put(key, merges.toSeq)
-    }
-    merges.toSeq.toDF("rank", "merge_left", "merge_right", "pair_count")
+    mergeMemo.put(key, merges.toSeq).toDF("rank", "merge_left", "merge_right", "pair_count")
   }
 
   /** Segment `words` with an already-learned merge table: re-run the merges

@@ -141,7 +141,6 @@ object Classifier {
     // scale). The previous relational form (broadcast-join the weight
     // frame, groupBy doc then groupBy bucket — two shuffles per
     // iteration) is retained as [[trainShuffled]] for the equality spec.
-    gdRuns.incrementAndGet()
     val spark = hashed.sparkSession
     import spark.implicits._
     val feats = Caches.checkpointed(
@@ -312,8 +311,7 @@ object Classifier {
     * weights above, so a repeat invocation on an unchanged corpus skips
     * the eager percentile job entirely.
     */
-  private val thresholdMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+  private val thresholdMemo = new Caches.Memo[Double](16)
 
   private[graft] def medianCutLabels(docs: DataFrame,
                                      scored: DataFrame): DataFrame = {
@@ -336,23 +334,18 @@ object Classifier {
     // (doc_id, double) frame. Measured via executedPlan: 0 reused stages
     // in both lazy variants; see NOTES r12.
     val key = Caches.planMemoKey(scored)
-    val hit = if (key.nonEmpty) thresholdMemo.get(key) else null
-    val (sc, t) =
-      if (hit != null)
+    val (sc, t) = thresholdMemo.get(key) match {
+      case Some(hit) =>
         // memo hit: no eager job — the label join reads the scored frame
         // lazily (shared-cached so at most one materialization; for the
         // x39b entry it is the suite-shared unigram scored frame anyway)
-        (Caches.shared(scored), hit.doubleValue())
-      else {
+        (Caches.shared(scored), hit)
+      case None =>
         val ck = Caches.checkpointed(scored)
         val tRow = ck.agg(expr("percentile(mean_logprob, 0.5D)")).head()
         val t0 = if (tRow.isNullAt(0)) Double.PositiveInfinity else tRow.getDouble(0)
-        if (key.nonEmpty) {
-          if (thresholdMemo.size >= 16) thresholdMemo.clear()
-          thresholdMemo.put(key, t0)
-        }
-        (ck, t0)
-      }
+        (ck, thresholdMemo.put(key, t0))
+    }
     docs.select("doc_id").join(sc, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         when(col("mean_logprob") >= t, 1.0d).otherwise(0.0d).as("y"))
@@ -366,18 +359,10 @@ object Classifier {
     * query invocation is the in-engine demonstration's artifact, not the
     * serving shape. Training is deterministic (8-dp HALF_UP rounding per
     * update — the partition-invariance spec), so a memo hit returns
-    * BIT-IDENTICAL weights to a retrain; only file-backed corpora qualify
-    * (in-memory fixtures always train), and the key folds the underlying
-    * files' (name, length, mtime), so a rewritten corpus misses.
+    * BIT-IDENTICAL weights to a retrain. Its miss count is the number of
+    * distillations that trained.
     */
-  private val weightsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Double]]()
-
-  /** GD training-run counter (test observability, mirrors
-    * [[VectorSearch.lloydRuns]]): incremented once per [[trainOnFeatures]]
-    * invocation that actually runs the iteration loop.
-    */
-  private[graft] val gdRuns = new java.util.concurrent.atomic.AtomicLong(0L)
+  private[graft] val weightsMemo = new Caches.Memo[Array[Double]](16)
 
   /** Convenience: label via the LM filter, train, and classify the same
     * corpus (the in-engine demonstration; a production pipeline trains
@@ -396,15 +381,13 @@ object Classifier {
     // corpus fingerprint + hyperparameters identify the trained model; the
     // memo key is scoped HERE (not inside train) because train's `labels`
     // argument is caller-supplied in general
-    val key0 = Caches.planMemoKey(docs)
-    val key =
-      if (key0.nonEmpty) s"$key0|lr=$lr|it=$iters|q=$quantileLabels" else ""
-    val hit = if (key.nonEmpty) weightsMemo.get(key) else null
-    if (hit != null) {
+    val key = Caches.memoKey(docs, s"lr=$lr|it=$iters|q=$quantileLabels")
+    val hit = weightsMemo.get(key)
+    if (hit.nonEmpty) {
       // memo hit: training is skipped, so the label frame has exactly ONE
       // consumer (the classify join) — no eager checkpoint needed
       val labels = if (quantileLabels) lmLabelsQuantile(docs) else lmLabels(docs)
-      classifyFeatures(hashed, labels, hit)
+      classifyFeatures(hashed, labels, hit.get)
     } else {
       // checkpoint labels once up front: both arms read them (training
       // folds them into the doc-major frame; classify re-joins for
@@ -413,11 +396,8 @@ object Classifier {
       // Caches.withScope
       val labels = Caches.checkpointed(
         if (quantileLabels) lmLabelsQuantile(docs) else lmLabels(docs))
-      val w = trainOnFeatures(hashed, labels, docs.count().toDouble, lr, iters)
-      if (key.nonEmpty) {
-        if (weightsMemo.size >= 16) weightsMemo.clear()
-        weightsMemo.put(key, w)
-      }
+      val w = weightsMemo.put(key,
+        trainOnFeatures(hashed, labels, docs.count().toDouble, lr, iters))
       classifyFeatures(hashed, labels, w)
     }
   }

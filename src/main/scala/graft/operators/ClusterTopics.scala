@@ -53,7 +53,7 @@ object ClusterTopics {
     */
   def clusterTopics(docs: DataFrame, dim: Int = Dim, nCells: Int = NCells,
                     iters: Int = Iters, topTerms: Int = TopTerms): DataFrame = {
-    val emb = docEmbeddings(docs, dim).cache()
+    val emb = Caches.shared(docEmbeddings(docs, dim))
     val cents = VectorSearch.kmeansCentroids(emb, nCells, iters)
     val cells = Caches.shared(VectorSearch.assignCells(emb, cents)
       .select(col("vec_id").as("doc_id"), col("cell")))

@@ -327,7 +327,7 @@ object CorpusPrep {
     * self-split would otherwise re-scan the full corpus).
     */
   def qDecontaminate(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = distinctNgramHashes(Tables.documents(spark, sfDir), 5).cache()
+    val grams = Caches.shared(distinctNgramHashes(Tables.documents(spark, sfDir), 5))
     decontaminateGrams(grams.where(col("doc_id") % 20 =!= 0),
       grams.where(col("doc_id") % 20 === 0))
   }
@@ -337,7 +337,7 @@ object CorpusPrep {
     * the two queries share oracle semantics.
     */
   def qDecontaminateBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    val grams = distinctNgramHashes(Tables.documents(spark, sfDir), 5).cache()
+    val grams = Caches.shared(distinctNgramHashes(Tables.documents(spark, sfDir), 5))
     decontaminateGramsBloom(grams.where(col("doc_id") % 20 =!= 0),
       grams.where(col("doc_id") % 20 === 0),
       expectedItems = 1L * 1024 * 1024, numBits = 8L * 1024 * 1024)

@@ -247,33 +247,32 @@ object Dedup {
     }
 
   /** Session memo of the dup-mass probe verdict (one boolean per corpus
-    * fingerprint): every dispatch-selected family (jaccard, containment,
-    * LSH, calibration, n6/n6b) runs this probe per invocation, and the
+    * fingerprint), shared by the document ([[digestArmUncapped]]) and the
+    * embedding (`VectorSearch.embDigestArm`) probes — their keys are plans
+    * over different corpora, so they cannot collide. Every
+    * dispatch-selected family (jaccard, containment, LSH, calibration,
+    * n6/n6b, the x-vec pair ops) runs the probe per invocation, and the
     * statistic is a corpus property — r13's VERDICT measured the repeated
-    * probe job at 0.1–0.25 s per sub-second row. Env-forced arms bypass
-    * the memo entirely ([[pairsArmForced]] is checked first).
+    * probe job at 0.1–0.25 s per sub-second row.
     */
-  private val digestArmMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val dupMassMemo = new Caches.Memo[Boolean](32)
+
+  /** The digest-first verdict for the corpus under `key`: collapsing its
+    * byte-identical families removes at least 5% of its `n` rows
+    * (`1 - families/n >= 0.05`, counted over `fams`: one row per family,
+    * `fam_n` members).
+    * Env-forced arms bypass the memo entirely ([[pairsArmForced]] is
+    * checked first).
+    */
+  private[graft] def dupMassVerdict(key: String)(fams: => DataFrame): Boolean =
+    pairsArmForced.getOrElse(dupMassMemo.getOrElseUpdate(key) {
+      val row = fams.agg(count(lit(1)), sum("fam_n")).head()
+      val n = if (row.isNullAt(1)) 0L else row.getLong(1)
+      n > 0 && 1.0 - row.getLong(0).toDouble / n >= 0.05
+    })
 
   private[graft] def digestArmUncapped(docs: DataFrame): Boolean =
-    pairsArmForced.getOrElse {
-      val key = graft.operators.Caches.planMemoKey(docs)
-      val hit = if (key.nonEmpty) digestArmMemo.get(key) else null
-      if (hit != null) hit.booleanValue()
-      else {
-        val (fams, _, _) = digestFamilies(docs)
-        val row = fams.agg(count(lit(1)), sum("fam_n")).head()
-        val nFams = row.getLong(0)
-        val nDocs = if (row.isNullAt(1)) 0L else row.getLong(1)
-        val verdict = nDocs > 0 && 1.0 - nFams.toDouble / nDocs >= 0.05
-        if (key.nonEmpty) {
-          if (digestArmMemo.size >= 32) digestArmMemo.clear()
-          digestArmMemo.put(key, verdict)
-        }
-        verdict
-      }
-    }
+    dupMassVerdict(Caches.planMemoKey(docs))(digestFamilies(docs)._1)
 
   /** The member-level (no digest short-circuit) plan: exact mode's only
     * path, and the equality reference [[jaccardPairsDigestFirst]] is
@@ -1049,29 +1048,22 @@ object Dedup {
     * keeps the components arm that built it, so a hit restores
     * [[Duplicates.lastComponentsPath]] as `labelsFrameMemo` does.
     */
-  private val dedupFrameMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, String)]()
+  private val dedupFrameMemo = new Caches.Memo[(DataFrame, String)](8, _._1)
 
   def minhashDedup(docs: DataFrame, minEstJaccard: Double = 0.5,
                    maxBucketSize: Int = 0,
                    maxCollectEdges: Long = 5000000L,
                    digestFirst: Boolean = false): DataFrame = {
-    val key0 = graft.operators.Caches.planMemoKey(docs)
     val key =
-      if (key0.nonEmpty && maxCollectEdges > 0L)
-        s"$key0|j=$minEstJaccard|b=$maxBucketSize|c=$maxCollectEdges|d=$digestFirst"
+      if (maxCollectEdges > 0L) Caches.memoKey(docs,
+        s"j=$minEstJaccard|b=$maxBucketSize|c=$maxCollectEdges|d=$digestFirst")
       else ""
-    val hit = if (key.nonEmpty) dedupFrameMemo.get(key) else null
-    if (hit != null && (hit._1.sparkSession eq docs.sparkSession)) {
-      Duplicates.lastComponentsPath = hit._2
-      return Caches.shared(hit._1)
+    val (out, path) = dedupFrameMemo.getOrElseUpdate(key, docs.sparkSession) {
+      val built = minhashDedupArm(docs, minEstJaccard, maxBucketSize,
+        maxCollectEdges, digestFirst)
+      (built, Duplicates.lastComponentsPath)
     }
-    val out = minhashDedupArm(docs, minEstJaccard, maxBucketSize,
-      maxCollectEdges, digestFirst)
-    if (key.nonEmpty) {
-      if (dedupFrameMemo.size >= 8) dedupFrameMemo.clear()
-      dedupFrameMemo.put(key, (out, Duplicates.lastComponentsPath))
-    }
+    Duplicates.lastComponentsPath = path
     out
   }
 

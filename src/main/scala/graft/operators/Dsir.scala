@@ -83,7 +83,7 @@ object Dsir {
     // feats feeds the raw distribution, the target distribution, and the
     // scoring join — cache so the corpus tokenizes once (the suite-shared
     // termCounts pattern; Bench clears caches at family boundaries)
-    val feats = hashedGrams(docs, buckets).cache()
+    val feats = Caches.shared(hashedGrams(docs, buckets))
     val raw = feats.groupBy("b").agg(sum("cnt").as("rc"))
     val tgt = feats.join(docs.select("doc_id", "source"), "doc_id")
       .where(col("source").isin(targetSources: _*))

@@ -95,13 +95,9 @@ object Duplicates {
     * per invocation, which plan canonicalization treats as distinct, so
     * CacheManager could never substitute one invocation's cache into the
     * next (each call silently registered a new, never-hit entry).
-    * Returning the SAME DataFrame object fixes the sharing mechanism; a
-    * hit re-registers the cache (idempotent) so a `clearCache()` between
-    * consumers degrades to a rebuild, never a stale read. Session-guarded:
-    * a frame from a stopped/foreign session misses.
+    * Returning the SAME DataFrame object fixes the sharing mechanism.
     */
-  private val pairsFrameMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val pairsFrameMemo = new Caches.Memo[DataFrame](8, identity)
 
   private[graft] def pairSimilaritiesMembers(docs: DataFrame,
                                              threshold: Double = 0.8,
@@ -110,31 +106,23 @@ object Duplicates {
     // strategy wins (the kernel alone needs two more passes over tf —
     // vocabulary and vectors — so the cache pays for itself immediately).
     val tf = Caches.shared(tfSum(docs))
-    val memoKey0 = planMemoKey(tf)
-    val memoKey =
-      if (memoKey0.nonEmpty) s"$memoKey0|t=$threshold|cap=$dfCapFraction" else ""
-    val memoHit = if (memoKey.nonEmpty) pairsFrameMemo.get(memoKey) else null
-    if (memoHit != null && (memoHit.sparkSession eq docs.sparkSession))
-      return Caches.shared(memoHit)
-    val stats = tf.agg(
-      countDistinct(col("token")).as("vocab"),
-      countDistinct(col("doc_id")).as("docs")).head()
-    val (vocabN, docsN) = (stats.getLong(0), stats.getLong(1))
-    val pairs =
-      if (vocabN > 0 && vocabN <= DenseMaxVocab && docsN * vocabN <= DenseMaxCells)
-        kernelFromTf(tf, threshold)
-      else sparseFromTf(tf, docs, threshold, dfCapFraction)
-    // The thresholded edge list is the engine's most-reused intermediate —
-    // clustering, unique-document selection and the pipeline all consume
-    // it. Persisting lets Spark's CacheManager substitute the materialized
-    // result into any later plan that canonically matches (the reference
-    // caches its IDF corpus and TF vectors for the same reason).
-    val shared = Caches.shared(pairs)
-    if (memoKey.nonEmpty) {
-      if (pairsFrameMemo.size >= 8) pairsFrameMemo.clear()
-      pairsFrameMemo.put(memoKey, shared)
+    val memoKey = Caches.memoKey(tf, s"t=$threshold|cap=$dfCapFraction")
+    pairsFrameMemo.getOrElseUpdate(memoKey, docs.sparkSession) {
+      val stats = tf.agg(
+        countDistinct(col("token")).as("vocab"),
+        countDistinct(col("doc_id")).as("docs")).head()
+      val (vocabN, docsN) = (stats.getLong(0), stats.getLong(1))
+      val pairs =
+        if (vocabN > 0 && vocabN <= DenseMaxVocab && docsN * vocabN <= DenseMaxCells)
+          kernelFromTf(tf, threshold)
+        else sparseFromTf(tf, docs, threshold, dfCapFraction)
+      // The thresholded edge list is the engine's most-reused intermediate —
+      // clustering, unique-document selection and the pipeline all consume
+      // it. Persisting lets Spark's CacheManager substitute the materialized
+      // result into any later plan that canonically matches (the reference
+      // caches its IDF corpus and TF vectors for the same reason).
+      Caches.shared(pairs)
     }
-    shared
   }
 
   /** [[pairSimilarities]]' digest-first arm (the [[Dedup]] x2/x3 move
@@ -246,39 +234,26 @@ object Duplicates {
     * canonicalized TF plan: clustering, unique-docs and the pipeline all
     * ask for the same corpus's matrix, and the collects happen at plan
     * construction where DataFrame-level caching can't help. Bounded at a
-    * handful of corpora; cleared wholesale when it overflows.
+    * handful of corpora.
     */
   private val kernelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Long], Array[Array[Double]], Array[Double])]()
+    new Caches.Memo[(Array[Long], Array[Array[Double]], Array[Double])](8)
 
-  // Memo keys come from [[Caches.planMemoKey]]: file-backed plans only,
-  // with a (name, length, mtime) fingerprint of the underlying files so an
-  // in-place parquet rewrite misses the memo instead of serving stale
-  // matrices/edges (see the Scaladoc there).
-  private def planMemoKey(df: DataFrame): String = Caches.planMemoKey(df)
-
-  private def collectMatrix(tf: DataFrame): (Array[Long], Array[Array[Double]], Array[Double]) = {
-    val spark = tf.sparkSession
-    import spark.implicits._
-    val key = planMemoKey(tf)
-    val memoizable = key.nonEmpty
-    val hit = if (memoizable) kernelMemo.get(key) else null
-    if (hit != null) return hit
-    val vocab = tf.select("token").distinct().orderBy("token").as[String].collect()
-    val rows = tf.groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col("token"), col("tf")))).as("m"))
-      .select(col("doc_id"),
-        transform(lit(vocab), t => coalesce(element_at(col("m"), t), lit(0.0))).as("v"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-    val ids = rows.map(_._1)
-    val vecs = rows.map(_._2)
-    val norms = vecs.map(v => { var s = 0.0; var k = 0; while (k < v.length) { s += v(k) * v(k); k += 1 }; math.sqrt(s) })
-    if (memoizable) {
-      if (kernelMemo.size >= 8) kernelMemo.clear()
-      kernelMemo.put(key, (ids, vecs, norms))
+  private def collectMatrix(tf: DataFrame): (Array[Long], Array[Array[Double]], Array[Double]) =
+    kernelMemo.getOrElseUpdate(Caches.planMemoKey(tf)) {
+      val spark = tf.sparkSession
+      import spark.implicits._
+      val vocab = tf.select("token").distinct().orderBy("token").as[String].collect()
+      val rows = tf.groupBy("doc_id")
+        .agg(map_from_entries(collect_list(struct(col("token"), col("tf")))).as("m"))
+        .select(col("doc_id"),
+          transform(lit(vocab), t => coalesce(element_at(col("m"), t), lit(0.0))).as("v"))
+        .as[(Long, Array[Double])].collect().sortBy(_._1)
+      val ids = rows.map(_._1)
+      val vecs = rows.map(_._2)
+      val norms = vecs.map(v => { var s = 0.0; var k = 0; while (k < v.length) { s += v(k) * v(k); k += 1 }; math.sqrt(s) })
+      (ids, vecs, norms)
     }
-    (ids, vecs, norms)
-  }
 
   private def kernelFromTf(tf: DataFrame, threshold: Double): DataFrame = {
     val spark = tf.sparkSession
@@ -343,8 +318,7 @@ object Duplicates {
     * edge list to the driver by design — memoizing the collected array just
     * skips re-running the similarity job for the later consumers.
     */
-  private val edgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Long)]]()
+  private val edgeMemo = new Caches.Memo[Array[(Long, Long)]](8)
 
   /** Which path the last [[components]] call dispatched to ("collect" |
     * "iterative") — observability hook for the dispatch spec.
@@ -386,35 +360,29 @@ object Duplicates {
     * which arm builds the frame, and an explicit cap is a dispatch
     * request, so capped and uncapped frames memoize separately.
     */
-  private val labelsFrameMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, String)]()
+  private val labelsFrameMemo = new Caches.Memo[(DataFrame, String)](8, _._1)
 
   def components(docs: DataFrame, threshold: Double = 0.8,
                  maxCollectEdges: Long = 5000000L): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val key0 = planMemoKey(docs)
     // v2: the memo holds REP-level edges (digest-first), not member edges
-    val key = if (key0.nonEmpty) s"$key0|t=$threshold|v2" else ""
+    val key = Caches.memoKey(docs, s"t=$threshold|v2")
     val frameKey = if (key.nonEmpty) s"$key|cap=$maxCollectEdges" else ""
-    val frameHit = if (frameKey.nonEmpty) labelsFrameMemo.get(frameKey) else null
-    if (frameHit != null && (frameHit._1.sparkSession eq docs.sparkSession)) {
-      lastComponentsPath = frameHit._2
-      return Caches.shared(frameHit._1)
+    val frameHit = labelsFrameMemo.get(frameKey, spark)
+    if (frameHit.nonEmpty) {
+      lastComponentsPath = frameHit.get._2
+      return frameHit.get._1
     }
     val (_, members, repDocs) = Dedup.digestFamilies(docs)
-    val hit = if (key.nonEmpty) edgeMemo.get(key) else null
     // honor the caller's cap even on a memo hit: an explicit small cap is
     // a request to avoid the driver path, not just a cost heuristic
-    if (hit != null && hit.length <= maxCollectEdges) {
+    val hit = edgeMemo.get(key).filter(_.length <= maxCollectEdges)
+    if (hit.nonEmpty) {
       lastComponentsPath = "collect"
       val expanded = Caches.shared(
-        expandRepLabels(docs, members, repDocs, unionFindLabels(repDocs, hit)))
-      if (frameKey.nonEmpty) {
-        if (labelsFrameMemo.size >= 8) labelsFrameMemo.clear()
-        labelsFrameMemo.put(frameKey, (expanded, lastComponentsPath))
-      }
-      return expanded
+        expandRepLabels(docs, members, repDocs, unionFindLabels(repDocs, hit.get)))
+      return labelsFrameMemo.put(frameKey, (expanded, lastComponentsPath))._1
     }
     // repDocs are already digest-collapsed — call the member arm directly
     // rather than re-probing dup mass over the rep corpus
@@ -423,21 +391,13 @@ object Duplicates {
     val repLabels =
       if (pairs.count() <= maxCollectEdges) {
         lastComponentsPath = "collect"
-        val edges = pairs.as[(Long, Long)].collect()
-        if (key.nonEmpty) {
-          if (edgeMemo.size >= 8) edgeMemo.clear()
-          edgeMemo.put(key, edges)
-        }
-        unionFindLabels(repDocs, edges)
+        unionFindLabels(repDocs, edgeMemo.put(key, pairs.as[(Long, Long)].collect()))
       } else {
         lastComponentsPath = "iterative"
         propagateMinLabels(repDocs, pairs)
       }
     val result = Caches.shared(expandRepLabels(docs, members, repDocs, repLabels))
-    if (frameKey.nonEmpty) {
-      if (labelsFrameMemo.size >= 8) labelsFrameMemo.clear()
-      labelsFrameMemo.put(frameKey, (result, lastComponentsPath))
-    }
+    labelsFrameMemo.put(frameKey, (result, lastComponentsPath))
     // both arms are concrete past this point (collected edge list /
     // checkpointed label frame) — the pair checkpoint can go now
     Caches.releaseCheckpoint(pairs)

@@ -123,15 +123,14 @@ object Rag {
     // counts feeds IDF and the weights; the embedding frame feeds Lloyd
     // training (iters passes) AND the retrieval join — cache both so the
     // chunk scan runs once, not once per consumer
-    val counts = chunkCounts(chunks).cache()
+    val counts = Caches.shared(chunkCounts(chunks))
     // token-keyed, Zipf-small; shared-cached so the per-run query
     // embedding joins a materialized IDF instead of re-aggregating counts
     val idf = Caches.shared(chunkIdf(counts, chunks))
-    val emb = denseFromWeights(hashedWeights(counts, idf, dim), dim)
+    val emb = Caches.shared(denseFromWeights(hashedWeights(counts, idf, dim), dim)
       // an all-zero vector (possible only if every bucket cancels to
       // exactly 0) has no cosine; drop it identically in both engines
-      .where(array_max(transform(col("embedding"), x => abs(x))) > 0)
-      .cache()
+      .where(array_max(transform(col("embedding"), x => abs(x))) > 0))
     // the query embedded by the SAME transform, in the chunk-corpus IDF
     // space (out-of-corpus terms drop out of the idf join, like sklearn's
     // transform on unseen terms)

@@ -54,8 +54,8 @@ object ServedSearch {
     */
   val IndexBuckets = 64
 
-  /** Build counter for the memo spec (the [[VectorSearch.lloydRuns]]
-    * pattern): a probe-only re-call must not rebuild the artifact.
+  /** Build counter for the memo spec: a probe-only re-call must not
+    * rebuild the artifact.
     */
   val indexBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
 

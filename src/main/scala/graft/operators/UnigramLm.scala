@@ -113,8 +113,7 @@ object UnigramLm {
     * recomputed driver-side, so the kernel adds the exact bits the
     * relational arm adds.
     */
-  private val modelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Double)]]()
+  private val modelMemo = new Caches.Memo[Seq[(String, Double)]](8)
 
   private def collectModel(lp: DataFrame): Seq[(String, Double)] = {
     import lp.sparkSession.implicits._
@@ -127,16 +126,8 @@ object UnigramLm {
   def modelSeq(docs: DataFrame,
                vocabSize: Int = Wordpiece.DefaultVocab,
                maxLen: Int = Wordpiece.MaxPieceLen): Seq[(String, Double)] = {
-    val key0 = Caches.planMemoKey(docs)
-    val key = if (key0.nonEmpty) s"$key0|ug=$vocabSize,$maxLen" else ""
-    val hit = if (key.nonEmpty) modelMemo.get(key) else null
-    if (hit != null) return hit
-    val m = collectModel(pieceLogProbs(docs, vocabSize, maxLen))
-    if (key.nonEmpty) {
-      if (modelMemo.size >= 8) modelMemo.clear()
-      modelMemo.put(key, m)
-    }
-    m
+    modelMemo.getOrElseUpdate(Caches.memoKey(docs, s"ug=$vocabSize,$maxLen"))(
+      collectModel(pieceLogProbs(docs, vocabSize, maxLen)))
   }
 
   /** [[viterbiFromModel]] via the fused DP kernel: `(word, cnt, v)` where

@@ -128,39 +128,14 @@ object VectorSearch {
     (fams, members, repEmb)
   }
 
-  /** Dup-mass arm dispatch for the vector pair ops, mirroring
-    * [[Dedup.digestArmUncapped]] (same 0.05 mass threshold, same
-    * `SPARK_GRAFT_PAIRS_ARM` dev-knob override): one linear aggregate
-    * over the suite-shared digest frame decides whether the byte-twin
-    * collapse pays before any signatures/blocks/cells are built.
+  /** Dup-mass arm dispatch for the vector pair ops: the verdict (and
+    * memo) [[Dedup.digestArmUncapped]] uses, over the suite-shared
+    * embedding digest frame — same 0.05 mass threshold, same
+    * `SPARK_GRAFT_PAIRS_ARM` dev-knob override — decides whether the
+    * byte-twin collapse pays before any signatures/blocks/cells are built.
     */
-  /** Session memo of the vector dup-mass verdict — the
-    * [[Dedup.digestArmUncapped]] memo in embedding space: the probe
-    * statistic is a corpus property, so the per-invocation aggregate job
-    * (r13 VERDICT finding #2: 0.1–0.25 s on every sub-second x-vec row)
-    * runs once per corpus fingerprint. Env-forced arms bypass the memo.
-    */
-  private val embArmMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   private[graft] def embDigestArm(embeddings: DataFrame): Boolean =
-    Dedup.pairsArmForced.getOrElse {
-      val key = Caches.planMemoKey(embeddings)
-      val hit = if (key.nonEmpty) embArmMemo.get(key) else null
-      if (hit != null) hit.booleanValue()
-      else {
-        val (fams, _, _) = embFamilies(embeddings)
-        val row = fams.agg(count(lit(1)), sum("fam_n")).head()
-        val nFams = row.getLong(0)
-        val nVecs = if (row.isNullAt(1)) 0L else row.getLong(1)
-        val verdict = nVecs > 0 && 1.0 - nFams.toDouble / nVecs >= 0.05
-        if (key.nonEmpty) {
-          if (embArmMemo.size >= 32) embArmMemo.clear()
-          embArmMemo.put(key, verdict)
-        }
-        verdict
-      }
-    }
+    Dedup.dupMassVerdict(Caches.planMemoKey(embeddings))(embFamilies(embeddings)._1)
 
   /** [[nearDuplicatePairsBlocked]]'s digest-first arm (the n6 r12 move in
     * vector space): the blocked O(n²·d) kernel runs on unique vectors
@@ -351,12 +326,6 @@ object VectorSearch {
     * centroid matrix ever reaches the driver. Empty cells keep their old
     * centroid.
     */
-  /** How many Lloyd trainings have run in this JVM — observability hook for
-    * the persisted-index specs ("probe-from-disk must not retrain").
-    * AtomicLong: concurrent query execution must not lose increments.
-    */
-  private[graft] val lloydRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Session memo of trained coarse centroids keyed by (corpus
     * fingerprint, k, iters) — the [[graft.operators.Caches.planMemoKey]]
     * pattern the BPE merge-table and n10 edge memos already use: trained
@@ -364,32 +333,25 @@ object VectorSearch {
     * holds resident, not per-query work. The Lloyd trainer is
     * deterministic (vec_id-ordered init, per-iteration 6-dp HALF_UP
     * rounding), so a memo hit returns BIT-IDENTICAL centroids to a
-    * retrain; only file-backed corpora qualify (in-memory fixtures get an
-    * empty key and always train), and the key folds the underlying files'
-    * (name, length, mtime), so a rewritten corpus misses.
+    * retrain. Every Lloyd training runs on a miss of this memo or
+    * [[pqMemo]]: their miss counts are the training count the
+    * persisted-index specs read ("probe-from-disk must not retrain").
     */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Seq[Seq[Seq[Double]]])]()
+  private[graft] val centroidMemo = new Caches.Memo[Array[Array[Double]]](16)
+  private[graft] val pqMemo = new Caches.Memo[(Int, Seq[Seq[Seq[Double]]])](16)
 
   def kmeansCentroids(embeddings: DataFrame, k: Int = 16,
                       iters: Int = 5): Array[Array[Double]] = {
-    val key0 = Caches.planMemoKey(embeddings)
-    val key = if (key0.nonEmpty) s"$key0|k=$k|it=$iters" else ""
-    val hit = if (key.nonEmpty) centroidMemo.get(key) else null
-    if (hit != null) return hit.map(_.clone())
+    val key = Caches.memoKey(embeddings, s"k=$k|it=$iters")
+    val hit = centroidMemo.get(key)
+    if (hit.nonEmpty) return hit.get.map(_.clone())
     val trained = kmeansCentroidsTrain(embeddings, k, iters)
-    if (key.nonEmpty) {
-      if (centroidMemo.size >= 16) centroidMemo.clear()
-      centroidMemo.put(key, trained.map(_.clone()))
-    }
+    centroidMemo.put(key, trained.map(_.clone()))
     trained
   }
 
   private def kmeansCentroidsTrain(embeddings: DataFrame, k: Int,
                                    iters: Int): Array[Array[Double]] = {
-    lloydRuns.incrementAndGet()
     val spark = embeddings.sparkSession
     import spark.implicits._
     // shared-cached training projection (r14): every Lloyd iteration — and
@@ -1014,21 +976,12 @@ object VectorSearch {
                              iters: Int): (Int, Seq[Seq[Seq[Double]]]) = {
     // same model memo as [[kmeansCentroids]] (books are immutable Seqs —
     // no defensive copy needed)
-    val key0 = Caches.planMemoKey(embeddings)
-    val key = if (key0.nonEmpty) s"$key0|m=$m|k=$k|it=$iters" else ""
-    val hit = if (key.nonEmpty) pqMemo.get(key) else null
-    if (hit != null) return hit
-    val trained = pqTrainRun(embeddings, m, k, iters)
-    if (key.nonEmpty) {
-      if (pqMemo.size >= 16) pqMemo.clear()
-      pqMemo.put(key, trained)
-    }
-    trained
+    pqMemo.getOrElseUpdate(Caches.memoKey(embeddings, s"m=$m|k=$k|it=$iters"))(
+      pqTrainRun(embeddings, m, k, iters))
   }
 
   private def pqTrainRun(embeddings: DataFrame, m: Int, k: Int,
                          iters: Int): (Int, Seq[Seq[Seq[Double]]]) = {
-    lloydRuns.incrementAndGet()
     val spark = embeddings.sparkSession
     import spark.implicits._
     // same shared (vec_id, v) cache as [[kmeansCentroids]] — the PQ chain
@@ -1332,7 +1285,7 @@ object VectorSearch {
   }
 
   /** The persisted quantizer, read back — one model-sized parquet read, no
-    * Lloyd retrain (spec-asserted via [[lloydRuns]]).
+    * Lloyd retrain (spec-asserted via the [[centroidMemo]] miss count).
     */
   private def readCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
     import spark.implicits._

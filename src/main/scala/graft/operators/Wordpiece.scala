@@ -98,8 +98,7 @@ object Wordpiece {
     * state a tokenizer service holds resident, and x73/x74/x75/x80 all
     * segment under the SAME seed on an unchanged corpus.
     */
-  private val vocabMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  private val vocabMemo = new Caches.Memo[Seq[String]](8)
 
   /** The learned piece vocabulary collected to a sorted `Seq` — the model
     * argument of the greedy-match and Viterbi kernels.
@@ -107,17 +106,10 @@ object Wordpiece {
   def vocabPieces(docs: DataFrame, vocabSize: Int = DefaultVocab,
                   maxLen: Int = MaxPieceLen): Seq[String] = {
     import docs.sparkSession.implicits._
-    val key0 = Caches.planMemoKey(docs)
-    val key = if (key0.nonEmpty) s"$key0|wp=$vocabSize,$maxLen" else ""
-    val hit = if (key.nonEmpty) vocabMemo.get(key) else null
-    if (hit != null) return hit
-    val v = pieceVocab(docs, vocabSize, maxLen)
-      .select("piece").as[String].collect().toSeq.sorted
-    if (key.nonEmpty) {
-      if (vocabMemo.size >= 8) vocabMemo.clear()
-      vocabMemo.put(key, v)
+    vocabMemo.getOrElseUpdate(Caches.memoKey(docs, s"wp=$vocabSize,$maxLen")) {
+      pieceVocab(docs, vocabSize, maxLen)
+        .select("piece").as[String].collect().toSeq.sorted
     }
-    v
   }
 
   /** Per-document subword statistics under the WordPiece tokenizer —

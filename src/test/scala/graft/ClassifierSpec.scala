@@ -99,10 +99,10 @@ class ClassifierSpec extends SparkSpec {
     // a pure memo hit (no GD run) and produce the identical output
     val first = Classifier.qualityDistill(docs)
       .orderBy("doc_id").collect().toSeq
-    val runsBefore = Classifier.gdRuns.get()
+    val runsBefore = Classifier.weightsMemo.misses
     val second = Classifier.qualityDistill(docs)
       .orderBy("doc_id").collect().toSeq
-    assert(Classifier.gdRuns.get() == runsBefore,
+    assert(Classifier.weightsMemo.misses == runsBefore,
       "second distillation on an unchanged corpus must not retrain")
     assert(second == first,
       "memoized weights must reproduce the trained output exactly")

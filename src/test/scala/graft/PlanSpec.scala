@@ -14,6 +14,10 @@ class PlanSpec extends SparkSpec {
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Lloyd trainings so far: each one runs on a centroid or PQ memo miss. */
+  private def lloydRuns: Long =
+    graft.operators.VectorSearch.centroidMemo.misses + graft.operators.VectorSearch.pqMemo.misses
+
   test("dimension joins broadcast, never sort-merge (r2, r3)") {
     val p2 = physical(Relational.topRevenueOrders(spark, sf0001))
     assert(p2.contains("BroadcastHashJoin"))
@@ -254,14 +258,14 @@ class PlanSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
     VectorSearch.writeIvfPqIndex(emb, dir, nCells = 8, cIters = 2, iters = 2)
-    val lloydBefore = VectorSearch.lloydRuns.get()
+    val lloydBefore = lloydRuns
     val probe = VectorSearch.probeIvfPqIndex(spark, dir, emb, queryVecId = 0L,
       kTop = 10, nprobe = 3)
     val rows = probe.collect()
     assert(rows.nonEmpty)
     // serving reads the model — Lloyd must not have run again
-    assert(VectorSearch.lloydRuns.get() == lloydBefore,
-      s"probe retrained k-means: $lloydBefore -> ${VectorSearch.lloydRuns.get()}")
+    assert(lloydRuns == lloydBefore,
+      s"probe retrained k-means: $lloydBefore -> $lloydRuns")
     // the probed cells are a STATIC partition filter on the codes scan:
     // only those cell directories are listed (inspect the pre-AQE physical
     // plan — the adaptive wrapper hides scan nodes from collectFirst)
@@ -286,12 +290,12 @@ class PlanSpec extends SparkSpec {
     val corpus = emb.where(col("vec_id") % 50 =!= 0)
     val queries = emb.where(col("vec_id") % 50 === 0)
     VectorSearch.writeIvfIndex(corpus, dir, nCells = 8, iters = 2, trainSet = emb)
-    val lloydBefore = VectorSearch.lloydRuns.get()
+    val lloydBefore = lloydRuns
     val persisted = VectorSearch.probeIvfIndex(spark, dir, queries, k = 5, nprobe = 3)
       .orderBy("query_id", "rank").collect()
     assert(persisted.nonEmpty)
-    assert(VectorSearch.lloydRuns.get() == lloydBefore,
-      s"probe retrained k-means: $lloydBefore -> ${VectorSearch.lloydRuns.get()}")
+    assert(lloydRuns == lloydBefore,
+      s"probe retrained k-means: $lloydBefore -> $lloydRuns")
     val inline = VectorSearch.ivfKnnJoin(corpus, queries, k = 5, nCells = 8,
       nprobe = 3, iters = 2, trainSet = emb)
       .orderBy("query_id", "rank").collect()
@@ -322,12 +326,12 @@ class PlanSpec extends SparkSpec {
     val first83 = VectorSearch.qIvfPqProbeOnly(spark, sf0001).collect()
     assert(first82.nonEmpty && first83.nonEmpty)
     // second call must serve from the memoized artifact: zero Lloyd runs
-    val lloydBefore = VectorSearch.lloydRuns.get()
+    val lloydBefore = lloydRuns
     val second82 = VectorSearch.qIvfKnnJoinProbeOnly(spark, sf0001)
       .orderBy("query_id", "rank").collect()
     val second83 = VectorSearch.qIvfPqProbeOnly(spark, sf0001).collect()
-    assert(VectorSearch.lloydRuns.get() == lloydBefore,
-      s"probe-only re-call retrained: $lloydBefore -> ${VectorSearch.lloydRuns.get()}")
+    assert(lloydRuns == lloydBefore,
+      s"probe-only re-call retrained: $lloydBefore -> $lloydRuns")
     assert(second82.toSeq == first82.toSeq)
     assert(second83.toSeq == first83.toSeq)
     // ordering safety vs the full-cycle queries: x82/x83 overwrite THEIR
@@ -349,13 +353,13 @@ class PlanSpec extends SparkSpec {
     val evalSet = emb.where(col("vec_id") % 10 === 0)
     val dir = java.nio.file.Files.createTempDirectory("graft_semdecon_idx").toString
     VectorSearch.writeSemanticDecontamIndex(evalSet, dir, nCells = 8, iters = 2)
-    val lloydBefore = VectorSearch.lloydRuns.get()
+    val lloydBefore = lloydRuns
     val persisted = VectorSearch
       .probeSemanticDecontamIndex(spark, dir, corpus, threshold = 0.4, nprobe = 3)
       .orderBy("vec_id").collect()
     assert(persisted.nonEmpty)
-    assert(VectorSearch.lloydRuns.get() == lloydBefore,
-      s"probe retrained k-means: $lloydBefore -> ${VectorSearch.lloydRuns.get()}")
+    assert(lloydRuns == lloydBefore,
+      s"probe retrained k-means: $lloydBefore -> $lloydRuns")
     // lossless persistence: verdicts identical to a fresh train-and-assign
     val inline = VectorSearch.semanticDecontaminateIvf(corpus, evalSet,
       threshold = 0.4, nCells = 8, nprobe = 3, iters = 2)
@@ -364,11 +368,11 @@ class PlanSpec extends SparkSpec {
     // the registered serving row: second call must memo-hit (no retrain)
     val first = VectorSearch.qSemanticDecontamProbeOnly(spark, sf0001)
       .orderBy("vec_id").collect()
-    val lloydServe = VectorSearch.lloydRuns.get()
+    val lloydServe = lloydRuns
     val second = VectorSearch.qSemanticDecontamProbeOnly(spark, sf0001)
       .orderBy("vec_id").collect()
-    assert(VectorSearch.lloydRuns.get() == lloydServe,
-      s"x86c re-call retrained: $lloydServe -> ${VectorSearch.lloydRuns.get()}")
+    assert(lloydRuns == lloydServe,
+      s"x86c re-call retrained: $lloydServe -> $lloydRuns")
     assert(second.toSeq == first.toSeq)
   }
 
