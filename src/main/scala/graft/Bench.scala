@@ -91,25 +91,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = Session.local(cpus,
       // static conf: the default 100-entry LRU evicts generated classes
       // shared across the 100+ suite queries, forcing Janino recompiles;
       // size it to the suite so each distinct stage compiles once
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // Dev-only A/B knob (unset in driver runs): "k=v;k=v" session confs.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v)
-        case _ if kv.trim.isEmpty           => ()
-        case _ => System.err.println(s"ignoring malformed SPARK_GRAFT_EXTRA_CONF entry: '$kv'")
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      ("spark.sql.codegen.cache.maxEntries" -> "4096") +: Session.extraConf: _*)
     // untimed warmup: session/codegen/parquet-footer costs land here, not
     // in the first measured query that happens to touch each table
     for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: run queries in sequence and dump the SQL cache entries
   * (and whether they are materialized) between steps — for diagnosing
@@ -11,13 +10,7 @@ object CacheProbe {
     val sfDir = args(0)
     val names = args.drop(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, "spark.sql.session.timeZone" -> "UTC")
     def dumpCache(tag: String): Unit = {
       val cm = spark.sharedState.cacheManager
       val f = cm.getClass.getDeclaredMethods.find(_.getName == "cachedData").get

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: run one registered query repeatedly to split per-plan
   * first-run cost (codegen, parquet footers, stage setup) from
@@ -57,20 +56,8 @@ object Probe {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-    // same dev A/B knob as Bench: "k=v;k=v" extra session confs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v)
-        case _                              => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus,
+      ("spark.sql.session.timeZone" -> "UTC") +: Session.extraConf: _*)
     // reps=0: print the executed plan instead of timing (dev plan audits).
     // Execute FIRST: under adaptive query execution the pre-run
     // executedPlan is only the initial AdaptiveSparkPlan — runtime
@@ -100,9 +87,7 @@ object Probe {
       // count() on top lets column pruning delete projection-only compute
       val df = SparkEntry.queries(name)(spark, sfDir)
       val n = Bench.execRows(df)
-      val path = graft.operators.Duplicates.lastComponentsPath
-      println(f"run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n" +
-        (if (path.nonEmpty) s" componentsPath=$path" else ""))
+      println(f"run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n")
       // SPARK_GRAFT_PRINT_PLAN=1: executed plan after the LAST rep too —
       // warm-run plans differ from cold (cache substitution changes join
       // strategies), and reps=0 can only show the cold one

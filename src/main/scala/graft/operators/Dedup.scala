@@ -210,9 +210,7 @@ object Dedup {
     */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.5,
                    maxShingleDf: Int = 0): DataFrame =
-    if (maxShingleDf > 0)
-      if (pairsArmForced.contains(false)) jaccardPairsMembers(docs, threshold, maxShingleDf)
-      else jaccardPairsDigestFirst(docs, threshold, maxShingleDf)
+    if (maxShingleDf > 0) jaccardPairsDigestFirst(docs, threshold, maxShingleDf)
     else if (digestArmUncapped(docs)) jaccardPairsDigestFirst(docs, threshold, 0)
     else jaccardPairsMembers(docs, threshold, maxShingleDf)
 
@@ -232,19 +230,11 @@ object Dedup {
     * probe costs ~0.1–0.2 s — inside run noise. Threshold 0.05 sits far
     * below every regime where the arms measurably differ, and both arms
     * are output-identical (spec-pinned), so the exact cut is uncritical.
-    * `SPARK_GRAFT_PAIRS_ARM=members|digest` (dev knob, unset in driver
-    * runs) forces an arm for A/B probes — honored by BOTH modes: here,
-    * and in the capped branches of the three pair dispatches (capped mode
-    * otherwise routes digest-first unconditionally, which would make
-    * `=members` unable to force the member-level plan for capped A/B
-    * probes — the r11 ADVICE gap).
+    * Capped mode runs digest-first unconditionally; an A/B run of the two
+    * arms calls the `*Members`/`*DigestFirst` defs directly.
     */
-  private[graft] def pairsArmForced: Option[Boolean] =
-    sys.env.get("SPARK_GRAFT_PAIRS_ARM") match {
-      case Some("digest")  => Some(true)
-      case Some("members") => Some(false)
-      case _               => None
-    }
+  private[graft] def digestArmUncapped(docs: DataFrame): Boolean =
+    dupMassVerdict(Caches.planMemoKey(docs))(digestFamilies(docs)._1)
 
   /** Session memo of the dup-mass probe verdict (one boolean per corpus
     * fingerprint), shared by the document ([[digestArmUncapped]]) and the
@@ -261,18 +251,13 @@ object Dedup {
     * byte-identical families removes at least 5% of its `n` rows
     * (`1 - families/n >= 0.05`, counted over `fams`: one row per family,
     * `fam_n` members).
-    * Env-forced arms bypass the memo entirely ([[pairsArmForced]] is
-    * checked first).
     */
   private[graft] def dupMassVerdict(key: String)(fams: => DataFrame): Boolean =
-    pairsArmForced.getOrElse(dupMassMemo.getOrElseUpdate(key) {
+    dupMassMemo.getOrElseUpdate(key) {
       val row = fams.agg(count(lit(1)), sum("fam_n")).head()
       val n = if (row.isNullAt(1)) 0L else row.getLong(1)
       n > 0 && 1.0 - row.getLong(0).toDouble / n >= 0.05
-    })
-
-  private[graft] def digestArmUncapped(docs: DataFrame): Boolean =
-    dupMassVerdict(Caches.planMemoKey(docs))(digestFamilies(docs)._1)
+    }
 
   /** The member-level (no digest short-circuit) plan: exact mode's only
     * path, and the equality reference [[jaccardPairsDigestFirst]] is
@@ -511,9 +496,7 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.6,
                        maxShingleDf: Int = 0): DataFrame =
-    if (maxShingleDf > 0)
-      if (pairsArmForced.contains(false)) containmentPairsMembers(docs, threshold, maxShingleDf)
-      else containmentPairsDigestFirst(docs, threshold, maxShingleDf)
+    if (maxShingleDf > 0) containmentPairsDigestFirst(docs, threshold, maxShingleDf)
     else if (digestArmUncapped(docs)) containmentPairsDigestFirst(docs, threshold, 0)
     else containmentPairsMembers(docs, threshold, maxShingleDf)
 
@@ -763,15 +746,13 @@ object Dedup {
     * show (near-identical-but-not-byte-equal families) is the capped
     * mode's job, because in exact mode that corpus's quadratic cost is
     * its OUTPUT (all those pairs are genuine near-duplicates) — no
-    * output-preserving routing can avoid it.
-    * `SPARK_GRAFT_PAIRS_ARM=members|digest` (dev knob) forces an arm in
-    * both capped and uncapped modes (see [[pairsArmForced]]).
+    * output-preserving routing can avoid it. An A/B run of the two arms
+    * calls [[minhashLshPairsMembers]]/[[minhashLshPairsDigestFirst]]
+    * directly.
     */
   def minhashLshPairs(docs: DataFrame, minEstJaccard: Double = 0.5,
                       maxBucketSize: Int = 0): DataFrame =
-    if (maxBucketSize > 0)
-      if (pairsArmForced.contains(false)) minhashLshPairsMembers(docs, minEstJaccard, maxBucketSize)
-      else minhashLshPairsDigestFirst(docs, minEstJaccard, maxBucketSize)
+    if (maxBucketSize > 0) minhashLshPairsDigestFirst(docs, minEstJaccard, maxBucketSize)
     else if (digestArmUncapped(docs)) minhashLshPairsDigestFirst(docs, minEstJaccard, 0)
     else minhashLshPairsMembers(docs, minEstJaccard, maxBucketSize)
 
@@ -1023,6 +1004,17 @@ object Dedup {
         Seq("id2", "tok"))
   }
 
+  /** Session memo of the dedup family table — the pairs-frame-memo move
+    * for the capstone: the components label join embeds fresh driver data
+    * (union-find) or fresh checkpoint RDDs (iterative) per invocation, so
+    * the shared cache below never matched across calls and x45/x45c/x60/
+    * x71 each re-ran LSH + components. The FORCED-distributed diagnostic
+    * (`maxCollectEdges == 0`, x45b) is deliberately NOT memoized — that
+    * row exists to run the iterative propagation per call. Each entry
+    * keeps the components arm that built it, so a hit reports that arm.
+    */
+  private val dedupFrameMemo = new Caches.Memo[(DataFrame, String)](8, _._1)
+
   /** End-to-end MinHash dedup — the decision the candidate pairs exist to
     * feed: LSH pairs ([[minhashLshPairs]]) → single-linkage connected
     * components ([[Duplicates.componentsFromPairs]] — cost-dispatched
@@ -1038,53 +1030,50 @@ object Dedup {
     * list; nothing quadratic in the corpus, nothing driver-side beyond
     * the ≤`maxCollectEdges` fast path.
     */
-  /** Session memo of the dedup family table — the pairs-frame-memo move
-    * for the capstone: the components label join embeds fresh driver data
-    * (union-find) or fresh checkpoint RDDs (iterative) per invocation, so
-    * the shared cache below never matched across calls and x45/x45c/x60/
-    * x71 each re-ran LSH + components. The FORCED-distributed diagnostic
-    * (`maxCollectEdges == 0`, x45b) is deliberately NOT memoized — that
-    * row exists to run the iterative propagation per call. Each entry
-    * keeps the components arm that built it, so a hit restores
-    * [[Duplicates.lastComponentsPath]] as `labelsFrameMemo` does.
-    */
-  private val dedupFrameMemo = new Caches.Memo[(DataFrame, String)](8, _._1)
-
   def minhashDedup(docs: DataFrame, minEstJaccard: Double = 0.5,
                    maxBucketSize: Int = 0,
                    maxCollectEdges: Long = 5000000L,
-                   digestFirst: Boolean = false): DataFrame = {
+                   digestFirst: Boolean = false): DataFrame =
+    minhashDedupWithArm(docs, minEstJaccard, maxBucketSize, maxCollectEdges, digestFirst)._1
+
+  /** [[minhashDedup]] with the components arm that built its frame
+    * ("collect" | "iterative"); a memo hit reports the arm stored with the
+    * frame.
+    */
+  private[graft] def minhashDedupWithArm(docs: DataFrame, minEstJaccard: Double = 0.5,
+                                         maxBucketSize: Int = 0,
+                                         maxCollectEdges: Long = 5000000L,
+                                         digestFirst: Boolean = false)
+      : (DataFrame, String) = {
     val key =
       if (maxCollectEdges > 0L) Caches.memoKey(docs,
         s"j=$minEstJaccard|b=$maxBucketSize|c=$maxCollectEdges|d=$digestFirst")
       else ""
-    val (out, path) = dedupFrameMemo.getOrElseUpdate(key, docs.sparkSession) {
-      val built = minhashDedupArm(docs, minEstJaccard, maxBucketSize,
-        maxCollectEdges, digestFirst)
-      (built, Duplicates.lastComponentsPath)
+    dedupFrameMemo.getOrElseUpdate(key, docs.sparkSession) {
+      minhashDedupArm(docs, minEstJaccard, maxBucketSize, maxCollectEdges, digestFirst)
     }
-    Duplicates.lastComponentsPath = path
-    out
   }
 
   private def minhashDedupArm(docs: DataFrame, minEstJaccard: Double,
                               maxBucketSize: Int, maxCollectEdges: Long,
-                              digestFirst: Boolean): DataFrame =
-    if (digestFirst)
-      Caches.shared(minhashDedupDigestFirst(
-        docs, minEstJaccard, maxBucketSize, maxCollectEdges))
-    else {
-      val pairs = minhashLshPairs(docs, minEstJaccard, maxBucketSize).select("id1", "id2")
-      val labels =
-        Duplicates.componentsFromPairs(docs.select("doc_id"), pairs, maxCollectEdges)
-      val fams = labels.groupBy("component").agg(count(lit(1)).as("family_size"))
-      // shared-cached (r14): the capstone family table is consumed by x45
-      // (emits it), x60's report and x71's size stats — one LSH+components
-      // pass per corpus
-      Caches.shared(labels.join(fams, "component")
-        .select(col("doc_id"), col("component").as("family"), col("family_size"),
-          (col("doc_id") === col("component")).as("kept")))
-    }
+                              digestFirst: Boolean): (DataFrame, String) = {
+    val (out, arm) =
+      if (digestFirst)
+        minhashDedupDigestFirst(docs, minEstJaccard, maxBucketSize, maxCollectEdges)
+      else {
+        val pairs = minhashLshPairs(docs, minEstJaccard, maxBucketSize).select("id1", "id2")
+        val (labels, labelsArm) =
+          Duplicates.componentsFromPairs(docs.select("doc_id"), pairs, maxCollectEdges)
+        val fams = labels.groupBy("component").agg(count(lit(1)).as("family_size"))
+        (labels.join(fams, "component")
+          .select(col("doc_id"), col("component").as("family"), col("family_size"),
+            (col("doc_id") === col("component")).as("kept")), labelsArm)
+      }
+    // shared-cached (r14): the capstone family table is consumed by x45
+    // (emits it), x60's report and x71's size stats — one LSH+components
+    // pass per corpus
+    (Caches.shared(out), arm)
+  }
 
   /** [[minhashDedup]]'s digest-first arm (the x2b/x36b/p1 move applied to
     * the dedup capstone): byte-identical families collapse to one
@@ -1104,18 +1093,21 @@ object Dedup {
     *    member pairs at all — its members stay singletons, which is why
     *    expansion collapses a family onto its rep's component only when
     *    at least one of its band rows survived.
+    *
+    * Returned with its components arm.
     */
   private[graft] def minhashDedupDigestFirst(docs: DataFrame,
                                              minEstJaccard: Double,
                                              maxBucketSize: Int,
-                                             maxCollectEdges: Long): DataFrame = {
+                                             maxCollectEdges: Long)
+      : (DataFrame, String) = {
     val (fams, members, repDocs) = digestFamilies(docs)
     val sigs = Caches.shared(minhashSignatures(repDocs))
     val bandsShared = Caches.shared(
       memberWeightedCapBands(bandRows(sigs), fams, maxBucketSize))
     val repPairs = lshVerifiedPairs(sigs, bandsShared, minEstJaccard)
       .select("id1", "id2")
-    val repLabels = Duplicates.componentsFromPairs(
+    val (repLabels, arm) = Duplicates.componentsFromPairs(
       repDocs.select("doc_id"), repPairs, maxCollectEdges)
     val connectedReps = bandsShared.select(col("doc_id").as("rep_id")).distinct()
       .withColumn("has_bands", lit(true))
@@ -1126,9 +1118,9 @@ object Dedup {
         when(col("fam_n") === 1 || col("has_bands"), col("component"))
           .otherwise(col("doc_id")).as("family"))
     val famSizes = famLabeled.groupBy("family").agg(count(lit(1)).as("family_size"))
-    famLabeled.join(famSizes, "family")
+    (famLabeled.join(famSizes, "family")
       .select(col("doc_id"), col("family"), col("family_size"),
-        (col("doc_id") === col("family")).as("kept"))
+        (col("doc_id") === col("family")).as("kept")), arm)
   }
 
   /** Driver-harness fixture for the bench-visible capped variants

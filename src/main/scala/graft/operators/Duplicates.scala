@@ -79,15 +79,11 @@ object Duplicates {
     // the rep kernel examines ~1.1e7). Exact mode only (dfCapFraction 1.0
     // — a member-level df cap is a different statistic than a rep-level
     // one); the probe itself is one linear aggregate over the shared
-    // digest frame, and `SPARK_GRAFT_PAIRS_ARM` forces arms as in Dedup.
+    // digest frame.
     if (dfCapFraction >= 1.0 && Dedup.digestArmUncapped(docs))
       pairSimilaritiesDigestFirst(docs, threshold)
     else pairSimilaritiesMembers(docs, threshold, dfCapFraction)
 
-  /** The member-level plan (no digest collapse): the kernel-vs-sparse
-    * cost dispatch below, and the equality reference the digest-first arm
-    * is spec-checked against.
-    */
   /** Session memo of the shared pair frames, keyed by (TF-plan
     * fingerprint, threshold, df cap). The pairs cache below has always
     * been meant to serve every consumer of a corpus's edge list — but the
@@ -99,6 +95,10 @@ object Duplicates {
     */
   private val pairsFrameMemo = new Caches.Memo[DataFrame](8, identity)
 
+  /** The member-level plan (no digest collapse): the kernel-vs-sparse
+    * cost dispatch below, and the equality reference the digest-first arm
+    * is spec-checked against.
+    */
   private[graft] def pairSimilaritiesMembers(docs: DataFrame,
                                              threshold: Double = 0.8,
                                              dfCapFraction: Double = 1.0): DataFrame = {
@@ -296,6 +296,27 @@ object Duplicates {
     }.toDF("id1", "id2", "sim")
   }
 
+  /** Session-scoped memo of collected edge lists, keyed by (corpus plan,
+    * threshold): clustering, unique-docs, and both pipeline entries all
+    * collect the same thresholded pairs, and the small-graph path brings the
+    * edge list to the driver by design — memoizing the collected array just
+    * skips re-running the similarity job for the later consumers.
+    */
+  private val edgeMemo = new Caches.Memo[Array[(Long, Long)]](8)
+
+  /** Session memo of the expanded component-label frames — the
+    * [[pairsFrameMemo]] move for [[components]]: the collect arm's label
+    * join embeds a fresh driver-data LocalRelation per invocation, which
+    * plan canonicalization treats as distinct, so the n10/n11/p-family
+    * consumers each re-ran the full expansion even with the EDGE list
+    * memoized. A hit returns the same DataFrame (re-registered in the
+    * cache) with the arm that built it. Keyed by (corpus fingerprint,
+    * threshold, collect cap) — the cap changes which arm builds the frame,
+    * and an explicit cap is a dispatch request, so capped and uncapped
+    * frames memoize separately.
+    */
+  private val labelsFrameMemo = new Caches.Memo[(DataFrame, String)](8, _._1)
+
   /** N21: single-linkage clusters = connected components of the ≥ θ
     * similarity graph.
     *
@@ -309,34 +330,17 @@ object Duplicates {
     * goes to the distributed min-label-propagation loop over the same
     * checkpointed edges, so the similarity job runs exactly once either way.
     *
-    * Output: (doc_id, component) for every document, where component is the
-    * smallest doc_id reachable through the ≥ θ similarity graph.
-    */
-  /** Session-scoped memo of collected edge lists, keyed by (corpus plan,
-    * threshold): clustering, unique-docs, and both pipeline entries all
-    * collect the same thresholded pairs, and the small-graph path brings the
-    * edge list to the driver by design — memoizing the collected array just
-    * skips re-running the similarity job for the later consumers.
-    */
-  private val edgeMemo = new Caches.Memo[Array[(Long, Long)]](8)
-
-  /** Which path the last [[components]] call dispatched to ("collect" |
-    * "iterative") — observability hook for the dispatch spec.
-    */
-  @volatile private[graft] var lastComponentsPath: String = ""
-
-  /** N20/N21: single-linkage duplicate clusters, digest-first. A
-    * duplicate-heavy corpus is what this operator exists for, and there
-    * the member-level TF-cosine graph self-destructs: a byte-identical
-    * family of f documents contributes f identical TF vectors, so the
-    * inverted-index join fans out O(f²) per family and the edge list
-    * inflates past any collect cap with edges that carry no information
-    * (100× smoke: 500k docs with 99 twins each ⇒ a ~25M-edge graph whose
-    * edges are 99.99% within-family). Byte-identical grouping is one
-    * LINEAR digest shuffle, so — the same move as the capped-Jaccard
-    * digest-first path in [[Dedup]] — the similarity graph is built over
-    * one representative per family and labels propagate through the
-    * family map.
+    * N20: digest-first. A duplicate-heavy corpus is what this operator
+    * exists for, and there the member-level TF-cosine graph
+    * self-destructs: a byte-identical family of f documents contributes f
+    * identical TF vectors, so the inverted-index join fans out O(f²) per
+    * family and the edge list inflates past any collect cap with edges
+    * that carry no information (100× smoke: 500k docs with 99 twins each ⇒
+    * a ~25M-edge graph whose edges are 99.99% within-family).
+    * Byte-identical grouping is one LINEAR digest shuffle, so — the same
+    * move as the capped-Jaccard digest-first path in [[Dedup]] — the
+    * similarity graph is built over one representative per family and
+    * labels propagate through the family map.
     *
     * Output is IDENTICAL to the member-level graph (spec-checked):
     * members have exactly their representative's TF vector, so (a) every
@@ -348,60 +352,39 @@ object Duplicates {
     * rides the rep's termCounts presence, not the digest alone. Component
     * labels agree because every family's minimum id IS its
     * representative, so min-over-members ≡ min-over-reps.
+    *
+    * Output: (doc_id, component) for every document, where component is the
+    * smallest doc_id reachable through the ≥ θ similarity graph.
     */
-  /** Session memo of the expanded component-label frames — the
-    * [[pairsFrameMemo]] move for [[components]]: the collect arm's label
-    * join embeds a fresh driver-data LocalRelation per invocation, which
-    * plan canonicalization treats as distinct, so the n10/n11/p-family
-    * consumers each re-ran the full expansion even with the EDGE list
-    * memoized. A hit returns the same DataFrame (re-registered in the
-    * cache) and restores the dispatch-path flag the specs observe. Keyed
-    * by (corpus fingerprint, threshold, collect cap) — the cap changes
-    * which arm builds the frame, and an explicit cap is a dispatch
-    * request, so capped and uncapped frames memoize separately.
-    */
-  private val labelsFrameMemo = new Caches.Memo[(DataFrame, String)](8, _._1)
-
   def components(docs: DataFrame, threshold: Double = 0.8,
-                 maxCollectEdges: Long = 5000000L): DataFrame = {
+                 maxCollectEdges: Long = 5000000L): DataFrame =
+    componentsWithArm(docs, threshold, maxCollectEdges)._1
+
+  /** [[components]] with the arm that built its frame: "collect" (driver
+    * union-find) or "iterative" (distributed label propagation). A memo
+    * hit reports the arm stored with the frame.
+    */
+  private[graft] def componentsWithArm(docs: DataFrame, threshold: Double = 0.8,
+                                       maxCollectEdges: Long = 5000000L)
+      : (DataFrame, String) = {
     val spark = docs.sparkSession
-    import spark.implicits._
     // v2: the memo holds REP-level edges (digest-first), not member edges
     val key = Caches.memoKey(docs, s"t=$threshold|v2")
     val frameKey = if (key.nonEmpty) s"$key|cap=$maxCollectEdges" else ""
     val frameHit = labelsFrameMemo.get(frameKey, spark)
-    if (frameHit.nonEmpty) {
-      lastComponentsPath = frameHit.get._2
-      return frameHit.get._1
-    }
+    if (frameHit.nonEmpty) return frameHit.get
     val (_, members, repDocs) = Dedup.digestFamilies(docs)
     // honor the caller's cap even on a memo hit: an explicit small cap is
     // a request to avoid the driver path, not just a cost heuristic
     val hit = edgeMemo.get(key).filter(_.length <= maxCollectEdges)
-    if (hit.nonEmpty) {
-      lastComponentsPath = "collect"
-      val expanded = Caches.shared(
-        expandRepLabels(docs, members, repDocs, unionFindLabels(repDocs, hit.get)))
-      return labelsFrameMemo.put(frameKey, (expanded, lastComponentsPath))._1
-    }
-    // repDocs are already digest-collapsed — call the member arm directly
-    // rather than re-probing dup mass over the rep corpus
-    val pairs = Caches.checkpointed(pairSimilaritiesMembers(repDocs, threshold)
-      .select(col("id1").cast("long").as("id1"), col("id2").cast("long").as("id2")))
-    val repLabels =
-      if (pairs.count() <= maxCollectEdges) {
-        lastComponentsPath = "collect"
-        unionFindLabels(repDocs, edgeMemo.put(key, pairs.as[(Long, Long)].collect()))
-      } else {
-        lastComponentsPath = "iterative"
-        propagateMinLabels(repDocs, pairs)
-      }
-    val result = Caches.shared(expandRepLabels(docs, members, repDocs, repLabels))
-    labelsFrameMemo.put(frameKey, (result, lastComponentsPath))
-    // both arms are concrete past this point (collected edge list /
-    // checkpointed label frame) — the pair checkpoint can go now
-    Caches.releaseCheckpoint(pairs)
-    result
+    val (repLabels, arm) =
+      if (hit.nonEmpty) (unionFindLabels(repDocs, hit.get), "collect")
+      // repDocs are already digest-collapsed — call the member arm directly
+      // rather than re-probing dup mass over the rep corpus
+      else componentsFromPairs(repDocs, pairSimilaritiesMembers(repDocs, threshold),
+        maxCollectEdges, edgeMemo.put(key, _))
+    labelsFrameMemo.put(frameKey,
+      (Caches.shared(expandRepLabels(docs, members, repDocs, repLabels)), arm))
   }
 
   /** Propagate representative component labels to every family member.
@@ -433,39 +416,32 @@ object Duplicates {
     * [[components]] is spec-checked against. No memo: spec-only.
     */
   private[graft] def componentsMembers(docs: DataFrame, threshold: Double = 0.8,
-                                       maxCollectEdges: Long = 5000000L): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val pairs = Caches.checkpointed(pairSimilaritiesMembers(docs, threshold)
-      .select(col("id1").cast("long").as("id1"), col("id2").cast("long").as("id2")))
-    val result =
-      if (pairs.count() <= maxCollectEdges) unionFindLabels(docs, pairs.as[(Long, Long)].collect())
-      else propagateMinLabels(docs, pairs)
-    Caches.releaseCheckpoint(pairs)
-    result
-  }
+                                       maxCollectEdges: Long = 5000000L): DataFrame =
+    componentsFromPairs(docs, pairSimilaritiesMembers(docs, threshold), maxCollectEdges)._1
 
   /** Single-linkage components over an arbitrary undirected pair frame
-    * (id1, id2) — the same collect / iterative cost dispatch [[components]]
-    * uses, exposed so other candidate generators (the MinHash-LSH dedup
-    * capstone in [[Dedup]]) can reuse the machinery without re-deriving
-    * pairs from TF cosine. `ids` supplies the universe (a `doc_id` column);
-    * isolated ids label themselves.
+    * (id1, id2), with the arm it dispatched to — the collect / iterative
+    * cost dispatch [[components]] uses, exposed so other candidate
+    * generators (the MinHash-LSH dedup capstone in [[Dedup]]) can reuse
+    * the machinery without re-deriving pairs from TF cosine. `ids`
+    * supplies the universe (a `doc_id` column); isolated ids label
+    * themselves. The collect arm passes the driver-side edge list through
+    * `collected` (a memo's `put`) before union-find.
     */
-  private[graft] def componentsFromPairs(ids: DataFrame, pairs: DataFrame,
-                                         maxCollectEdges: Long = 5000000L): DataFrame = {
+  private[graft] def componentsFromPairs(
+      ids: DataFrame, pairs: DataFrame, maxCollectEdges: Long = 5000000L,
+      collected: Array[(Long, Long)] => Array[(Long, Long)] = identity)
+      : (DataFrame, String) = {
     val spark = ids.sparkSession
     import spark.implicits._
     val p = Caches.checkpointed(pairs
       .select(col("id1").cast("long").as("id1"), col("id2").cast("long").as("id2")))
     val result =
-      if (p.count() <= maxCollectEdges) {
-        lastComponentsPath = "collect"
-        unionFindLabels(ids, p.as[(Long, Long)].collect())
-      } else {
-        lastComponentsPath = "iterative"
-        propagateMinLabels(ids, p)
-      }
+      if (p.count() <= maxCollectEdges)
+        (unionFindLabels(ids, collected(p.as[(Long, Long)].collect())), "collect")
+      else (propagateMinLabels(ids, p), "iterative")
+    // both arms are concrete past this point (collected edge list /
+    // checkpointed label frame) — the pair checkpoint can go now
     Caches.releaseCheckpoint(p)
     result
   }

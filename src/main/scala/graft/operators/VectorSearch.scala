@@ -130,9 +130,9 @@ object VectorSearch {
 
   /** Dup-mass arm dispatch for the vector pair ops: the verdict (and
     * memo) [[Dedup.digestArmUncapped]] uses, over the suite-shared
-    * embedding digest frame — same 0.05 mass threshold, same
-    * `SPARK_GRAFT_PAIRS_ARM` dev-knob override — decides whether the
-    * byte-twin collapse pays before any signatures/blocks/cells are built.
+    * embedding digest frame — same 0.05 mass threshold — decides whether
+    * the byte-twin collapse pays before any signatures/blocks/cells are
+    * built.
     */
   private[graft] def embDigestArm(embeddings: DataFrame): Boolean =
     Dedup.dupMassVerdict(Caches.planMemoKey(embeddings))(embFamilies(embeddings)._1)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Classifier
+import graft.operators.{Caches, Classifier}
 import org.apache.spark.sql.functions._
 
 /** Hashed-feature logistic regression: the distillation task is actually
@@ -24,7 +24,7 @@ class ClassifierSpec extends SparkSpec {
   }
 
   test("training is invariant to input partitioning (determinism contract)") {
-    val labels = Classifier.lmLabels(docs).cache()
+    val labels = Caches.shared(Classifier.lmLabels(docs))
     val w3 = Classifier.train(docs.repartition(3), labels)
     val w11 = Classifier.train(docs.repartition(11), labels)
     assert(w3.toSeq == w11.toSeq,
@@ -33,7 +33,7 @@ class ClassifierSpec extends SparkSpec {
   }
 
   test("fused tree-aggregate gradient equals the relational two-shuffle path") {
-    val labels = Classifier.lmLabels(docs).cache()
+    val labels = Caches.shared(Classifier.lmLabels(docs))
     val fused = Classifier.train(docs, labels)
     val relational = Classifier.trainShuffled(docs, labels)
     assert(fused.toSeq == relational.toSeq,

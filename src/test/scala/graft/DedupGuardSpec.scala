@@ -213,14 +213,17 @@ class DedupGuardSpec extends SparkSpec {
 
   test("x45b runs the distributed components arm and matches the collect arm") {
     val planted = Dedup.plantedHotCorpus(Tables.documents(spark, sf0001))
-    val viaCollect = Dedup.minhashDedup(planted)
-      .as[(Long, Long, Long, Boolean)].collect().toSet
-    assert(graft.operators.Duplicates.lastComponentsPath == "collect")
+    val (collectFrame, collectArm) = Dedup.minhashDedupWithArm(planted)
+    val viaCollect = collectFrame.as[(Long, Long, Long, Boolean)].collect().toSet
+    assert(collectArm == "collect")
     val viaIter = Dedup.qMinhashDedupIterative(spark, sf0001)
       .as[(Long, Long, Long, Boolean)].collect().toSet
-    assert(graft.operators.Duplicates.lastComponentsPath == "iterative",
-      s"maxCollectEdges=0 must force the iterative arm, " +
-        s"got ${graft.operators.Duplicates.lastComponentsPath}")
+    // the arm of the call x45b makes (cap 0 is never memoized, so this
+    // runs the same build again)
+    val (_, iterArm) = Dedup.minhashDedupWithArm(
+      Dedup.plantedHotCorpus(Tables.documents(spark, sf0001)), maxCollectEdges = 0L)
+    assert(iterArm == "iterative",
+      s"maxCollectEdges=0 must force the iterative arm, got $iterArm")
     assert(viaIter == viaCollect,
       "the physical components path must be invisible to the result")
     // the planted family collapsed into one kept representative
@@ -230,14 +233,22 @@ class DedupGuardSpec extends SparkSpec {
   }
 
   test("a minhashDedup memo hit reports the arm that built the frame") {
+    def dedupArm(docs: DataFrame): String = {
+      val (out, arm) = Dedup.minhashDedupWithArm(docs); out.collect(); arm
+    }
+    def componentsArm(docs: DataFrame): String = {
+      val (out, arm) = graft.operators.Duplicates.componentsWithArm(docs, maxCollectEdges = 0)
+      out.collect(); arm
+    }
     val docs = Tables.documents(spark, sf0001) // file-backed: memoizable
-    Dedup.minhashDedup(docs).collect()
-    assert(graft.operators.Duplicates.lastComponentsPath == "collect")
-    graft.operators.Duplicates.components(docs, maxCollectEdges = 0).collect()
-    assert(graft.operators.Duplicates.lastComponentsPath == "iterative")
-    Dedup.minhashDedup(docs).collect()
-    assert(graft.operators.Duplicates.lastComponentsPath == "collect",
-      "a memo hit must restore the arm its frame was built by")
+    assert(Seq(dedupArm(docs), componentsArm(docs), dedupArm(docs)) ==
+      Seq("collect", "iterative", "collect"),
+      "a memo hit must report the arm its frame was built by")
+    // the reverse order, on the same rows under another plan (so other
+    // memo entries) that no earlier call has built
+    val other = Tables.documents(spark, sf0001).where(col("doc_id") >= 0L)
+    assert(Seq(componentsArm(other), dedupArm(other), componentsArm(other)) ==
+      Seq("iterative", "collect", "iterative"))
   }
 
   test("x45c digest-first dedup is output-identical to member-level, " +

@@ -80,12 +80,12 @@ class HybridSearchSpec extends SparkSpec {
   test("componentsFromPairs honors the collect/iterative dispatch") {
     val ids = (1L to 6L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id1", "id2")
-    val viaCollect = Duplicates.componentsFromPairs(ids, pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(Duplicates.lastComponentsPath == "collect")
-    val viaIterative = Duplicates.componentsFromPairs(ids, pairs, maxCollectEdges = 0L)
-      .as[(Long, Long)].collect().toMap
-    assert(Duplicates.lastComponentsPath == "iterative")
+    val (collectFrame, collectArm) = Duplicates.componentsFromPairs(ids, pairs)
+    val viaCollect = collectFrame.as[(Long, Long)].collect().toMap
+    assert(collectArm == "collect")
+    val (iterFrame, iterArm) = Duplicates.componentsFromPairs(ids, pairs, maxCollectEdges = 0L)
+    val viaIterative = iterFrame.as[(Long, Long)].collect().toMap
+    assert(iterArm == "iterative")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L)
     assert(viaCollect == expected && viaIterative == expected)
   }

@@ -28,10 +28,12 @@ class MemoSpec extends SparkSpec {
       "alpha beta gamma delta",
       "alpha beta gamma epsilon",
       "zeta eta theta iota")))
-    Caches.withScope {
-      Duplicates.components(docs, 0.5, maxCollectEdges = 0L).collect()
+    val arm = Caches.withScope {
+      val (built, arm) = Duplicates.componentsWithArm(docs, 0.5, maxCollectEdges = 0L)
+      built.collect()
+      arm
     }
-    assert(Duplicates.lastComponentsPath == "iterative")
+    assert(arm == "iterative")
     // outside the scope: a fresh consumer plan over the (re)served frame
     val again = Duplicates.components(docs, 0.5, maxCollectEdges = 0L)
     val sizes = rows(again.groupBy("component").count())
@@ -44,14 +46,16 @@ class MemoSpec extends SparkSpec {
   test("a memoized iterative minhashDedup frame does not outlive its scope's checkpoint") {
     val planted = fileBacked("memo-escape-mh",
       Dedup.plantedHotCorpus(Tables.documents(spark, sf0001)))
-    Caches.withScope {
-      Dedup.minhashDedup(planted, maxCollectEdges = 1L).collect()
+    val arm = Caches.withScope {
+      val (built, arm) = Dedup.minhashDedupWithArm(planted, maxCollectEdges = 1L)
+      built.collect()
+      arm
     }
-    assert(Duplicates.lastComponentsPath == "iterative")
+    assert(arm == "iterative")
     val again = Dedup.minhashDedup(planted, maxCollectEdges = 1L)
     val sizes = rows(again.groupBy("family").count())
-    val viaCollect = Dedup.minhashDedup(planted)
-    assert(Duplicates.lastComponentsPath == "collect")
+    val (viaCollect, collectArm) = Dedup.minhashDedupWithArm(planted)
+    assert(collectArm == "collect")
     assert(rows(again) == rows(viaCollect))
     assert(sizes == rows(viaCollect.groupBy("family").count()))
   }

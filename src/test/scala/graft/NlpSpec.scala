@@ -91,12 +91,13 @@ class NlpSpec extends SparkSpec {
       (104L, "falcon osprey heron delta"), (105L, "lonely unmatched tokens")
     ).toDF("doc_id", "text")
     // cap 0 = every edge is over-cap: must dispatch iterative
-    val big = Duplicates.components(docs, maxCollectEdges = 0L)
-      .as[(Long, Long)].collect().toMap
-    assert(Duplicates.lastComponentsPath == "iterative")
+    val (bigFrame, bigArm) = Duplicates.componentsWithArm(docs, maxCollectEdges = 0L)
+    val big = bigFrame.as[(Long, Long)].collect().toMap
+    assert(bigArm == "iterative")
     // default cap: small edge list collects, same labels either way
-    val small = Duplicates.components(docs).as[(Long, Long)].collect().toMap
-    assert(Duplicates.lastComponentsPath == "collect")
+    val (smallFrame, smallArm) = Duplicates.componentsWithArm(docs)
+    val small = smallFrame.as[(Long, Long)].collect().toMap
+    assert(smallArm == "collect")
     assert(big == small)
     assert(big(101L) == 100L && big(104L) == 103L && big(105L) == 105L)
   }

@@ -46,18 +46,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // fixture timestamps are naive parquet micros; the engine computes in
-      // (UTC-session) TimestampType, not TIMESTAMP_NTZ — see Tables.read
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** A fixed `local[4]` whatever `SPARK_GRAFT_CPUS` says. Fixture
+    * timestamps are naive parquet micros; the engine computes in
+    * (UTC-session) TimestampType, not TIMESTAMP_NTZ — see `Tables.read`.
+    */
+  lazy val session: SparkSession = Session.local("4",
+    "spark.sql.session.timeZone" -> "UTC", "spark.app.name" -> "graft-test")
 }
