@@ -93,44 +93,27 @@ object Dedup {
     ds.groupBy("doc_id")
       .agg(sort_array(collect_list("h60")).as("hs"), count(lit(1)).as("n")))
 
-  /** The member-level rarest-first ranked shingle index
-    * `(doc_id, h60, r, s)`: each document's shingles ranked by global (df,
-    * h60) order with the doc's set size alongside. Threshold-INDEPENDENT —
-    * the prefix cut is a filter on `r`/`s` applied by the caller — so the
-    * Jaccard (x2) and containment (x36) candidate generators share one
-    * cached build of the df aggregate + double window (guide §2.4: two
+  /** The rarest-first ranked shingle index of `f`'s representatives,
+    * `(doc_id, h60, r, s)` plus `fam_n` for the digest family: each rep's
+    * shingles ranked by global (df, h60) order with its set size alongside.
+    * The df is member-weighted (Σ family sizes — identical values to the
+    * full-corpus df, so the rarest-first order matches the member plan
+    * exactly). Threshold-INDEPENDENT — the prefix cut is a filter on
+    * `r`/`s` applied by the caller — so the Jaccard (x2/x2b) and
+    * containment (x36/x36b) candidate generators share one cached build of
+    * the df aggregate + double window per family (guide §2.4: two
     * operations keyed the same way share one exchange).
     */
-  private[graft] def rankedShingles(ds: DataFrame): DataFrame = {
+  private[graft] def rankedShingles(f: Families): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val dfs = ds.groupBy("h60").agg(count(lit(1)).as("df"))
+    val ds = f.weigh(distinctShingleHashes(f.repDocs))
+    val dfs = ds.groupBy("h60").agg(sum(f.weight).as("df"))
     val byRarity = Window.partitionBy("doc_id").orderBy("df", "h60")
     val perDoc = Window.partitionBy("doc_id")
     Caches.shared(ds.join(dfs, "h60")
       .withColumn("r", row_number().over(byRarity))
       .withColumn("s", count(lit(1)).over(perDoc))
-      .select("doc_id", "h60", "r", "s"))
-  }
-
-  /** [[rankedShingles]]' rep-level form for the digest-first arms:
-    * member-weighted df (`sum(fam_n)` — identical values to the
-    * full-corpus df, so the rarest-first order matches the member plan
-    * exactly) over one representative per byte-identical family. Shared-
-    * cached: the capped Jaccard (x2b) and capped containment (x36b) arms
-    * consume the identical subtree, and both prefix cuts are filters on
-    * top.
-    */
-  private[graft] def famRankedShingles(fams: DataFrame, repDocs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ds = distinctShingleHashes(repDocs)
-      .join(fams.select(col("rep_id").as("doc_id"), col("fam_n")), "doc_id")
-    val dfs = ds.groupBy("h60").agg(sum("fam_n").as("df"))
-    val byRarity = Window.partitionBy("doc_id").orderBy("df", "h60")
-    val perDoc = Window.partitionBy("doc_id")
-    Caches.shared(ds.join(dfs, "h60")
-      .withColumn("r", row_number().over(byRarity))
-      .withColumn("s", count(lit(1)).over(perDoc))
-      .select("doc_id", "h60", "fam_n", "r", "s"))
+      .drop("df"))
   }
 
   /** Exact duplicate groups via content digest (hash-groupBy — one shuffle
@@ -168,23 +151,29 @@ object Dedup {
     * mass case (a corpus that is mostly byte-identical families, where
     * "rows/cap" is still large) never reaches this join: capped mode
     * dispatches digest-first, which collapses those families to one
-    * representative each BEFORE bucketing ([[minhashLshPairsDigestFirst]]
-    * and the shingle-df analogue), so the frame being capped is already
-    * family-deduped.
+    * representative each BEFORE bucketing ([[familiesFor]]: the LSH band
+    * rows and the ranked shingle rows are rep-level), so the frame being
+    * capped is already family-deduped.
+    *
+    * A bucket's population is Σ `weight` over its rows: 1 each, or the
+    * digest family's `fam_n` (joined by `weigh` into the drop-set input
+    * where rows lack it), so a digest drop set is the member plan's.
     */
   private[graft] def capBuckets(rows: DataFrame, keys: Seq[String],
-                                maxBucketSize: Int): DataFrame =
+                                maxBucketSize: Int, weight: Column = lit(1L),
+                                weigh: DataFrame => DataFrame = identity): DataFrame =
     if (maxBucketSize <= 0) rows
-    else rows.join(broadcast(oversizedBuckets(rows, keys, maxBucketSize)),
+    else rows.join(broadcast(oversizedBuckets(weigh(rows), keys, maxBucketSize, weight)),
                    keys, "left_anti")
 
   /** The keys [[capBuckets]] would drop — exposed for specs and for
     * drop-side observability (log/inspect what a capped run excluded).
     */
   private[graft] def oversizedBuckets(rows: DataFrame, keys: Seq[String],
-                                      maxBucketSize: Int): DataFrame =
+                                      maxBucketSize: Int,
+                                      weight: Column = lit(1L)): DataFrame =
     rows.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
+      .agg(sum(weight).as("bucket_n"))
       .where(col("bucket_n") > maxBucketSize)
       .select(keys.map(col): _*)
 
@@ -210,15 +199,21 @@ object Dedup {
     */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.5,
                    maxShingleDf: Int = 0): DataFrame =
-    if (maxShingleDf > 0) jaccardPairsDigestFirst(docs, threshold, maxShingleDf)
-    else if (digestArmUncapped(docs)) jaccardPairsDigestFirst(docs, threshold, 0)
-    else jaccardPairsMembers(docs, threshold, maxShingleDf)
+    jaccardPairsOver(familiesFor(docs, maxShingleDf > 0), threshold, maxShingleDf)
 
-  /** Uncapped-mode arm dispatch for [[jaccardPairs]]/[[containmentPairs]]:
-    * the member-level plan's cost on a byte-identical family of f docs is
-    * O(f²) candidates + verifies, so on a duplicate-saturated corpus even
-    * EXACT mode wants the digest-first collapse (which is output-identical
-    * — spec-pinned uncapped as well as capped). The deciding statistic is
+  /** The family the pair kernels run over: digest when capped (capping
+    * exists because the corpus is duplicate-heavy, which is exactly where
+    * the collapse wins) or when [[digestArmUncapped]] says so. Both
+    * families give identical output: this picks a cost, never a result.
+    */
+  private[graft] def familiesFor(docs: DataFrame, capped: Boolean): Families =
+    if (capped || digestArmUncapped(docs)) digestFamilies(docs) else identityFamilies(docs)
+
+  /** Uncapped-mode dispatch for [[familiesFor]]: the identity family's
+    * cost on a byte-identical family of f docs is O(f²) candidates +
+    * verifies, so on a duplicate-saturated corpus even EXACT mode wants
+    * the digest-first collapse (which is output-identical — spec-pinned
+    * uncapped as well as capped). The deciding statistic is
     * the exact-duplicate mass `1 − families/docs`, read from one linear
     * digest pass over the cached [[digestFamilies]] digest frame — a scan
     * the digest arm then REUSES via the shared cache, so the probe is only
@@ -231,10 +226,11 @@ object Dedup {
     * below every regime where the arms measurably differ, and both arms
     * are output-identical (spec-pinned), so the exact cut is uncritical.
     * Capped mode runs digest-first unconditionally; an A/B run of the two
-    * arms calls the `*Members`/`*DigestFirst` defs directly.
+    * arms calls a kernel's `*Over` builder with [[identityFamilies]] or
+    * [[digestFamilies]].
     */
   private[graft] def digestArmUncapped(docs: DataFrame): Boolean =
-    dupMassVerdict(Caches.planMemoKey(docs))(digestFamilies(docs)._1)
+    dupMassVerdict(Caches.planMemoKey(docs))(digestFamilies(docs).fams)
 
   /** Session memo of the dup-mass probe verdict (one boolean per corpus
     * fingerprint), shared by the document ([[digestArmUncapped]]) and the
@@ -259,82 +255,107 @@ object Dedup {
       n > 0 && 1.0 - row.getLong(0).toDouble / n >= 0.05
     }
 
-  /** The member-level (no digest short-circuit) plan: exact mode's only
-    * path, and the equality reference [[jaccardPairsDigestFirst]] is
-    * spec-checked against in capped mode.
-    */
-  private[graft] def jaccardPairsMembers(docs: DataFrame, threshold: Double = 0.5,
-                                         maxShingleDf: Int = 0): DataFrame = {
-    // referenced three times below (arrays + the prefix index); the shared
-    // cache in [[distinctShingleHashes]] keeps the subtree to one run
-    val ds = distinctShingleHashes(docs)
-    // Verify over per-doc shingle-set arrays: one narrow aggregate builds a
-    // (doc_id, set, size) frame, then each surviving candidate pair costs
-    // two equi-joins on doc_id plus a per-row `array_intersect` — versus the
-    // previous expand-join form that re-shuffled |shingles(id1)| rows per
-    // candidate through a (id2, h60) join and a groupBy. Candidates are
-    // PPJoin-pruned (prefix + length + positional), so few pairs reach here.
-    val arrays = shingleArrays(ds)
-    prefixCandidates(ds, threshold, maxShingleDf)
-      .join(arrays.select(col("doc_id").as("id1"), col("hs").as("hs1"),
-        col("n").as("s1")), "id1")
-      .join(arrays.select(col("doc_id").as("id2"), col("hs").as("hs2"),
-        col("n").as("s2")), "id2")
-      .select(col("id1"), col("id2"),
-        size(array_intersect(col("hs1"), col("hs2"))).as("inter"),
-        col("s1"), col("s2"))
-      .select(col("id1"), col("id2"),
-        round(col("inter").cast("double") / (col("s1") + col("s2") - col("inter")), 6)
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
-
-  /** Capped-mode [[jaccardPairs]] with the digest-first short-circuit — the
-    * 100 TB path. A duplicate-saturated corpus is exactly where capped mode
-    * matters, and there the member-level plan goes superlinear for a
-    * self-inflicted reason: a byte-identical family of f documents puts f
-    * identical rows behind every one of its prefix keys, so the candidate
-    * join emits O(f²) pairs per family and the verify phase recomputes the
-    * same full-set intersection f²/2 times. Byte-identical grouping is a
-    * LINEAR digest shuffle ([[exactDuplicates]]' pass) — so capped mode
-    * resolves families first and runs the prefix+verify machinery on one
-    * representative per family.
+  /** Documents grouped into byte-identical families, the input of the
+    * pair kernels' one builder each ([[jaccardPairsOver]],
+    * [[containmentPairsOver]], [[lshPairsOver]]): `fams` `(rep_id, fam_n)`
+    * with `rep_id = min(doc_id)`, `members` `(doc_id, rep_id, fam_n)` for
+    * every document, and `repDocs`, one representative per family.
+    * [[identityFamilies]] (every document its own family) sets `identity`,
+    * so the kernels skip what it makes trivial: no digest pass, a literal
+    * weight, no expansion and no within-family pairs.
     *
-    * Output is IDENTICAL to the member-level plan (spec-checked), because
-    * every per-member quantity is family-constant and re-derivable:
+    * Why collapse: on a duplicate-saturated corpus the member plan goes
+    * superlinear for a self-inflicted reason — a byte-identical family of
+    * f documents puts f identical rows behind every one of its join keys,
+    * so the candidate join emits O(f²) pairs per family and the verify
+    * recomputes the same full-set intersection f²/2 times. Byte-identical
+    * grouping is a LINEAR digest shuffle ([[exactDuplicates]]' pass), so
+    * the kernels resolve families first and run the candidate+verify
+    * machinery on one representative per family.
     *
-    *  - shingle df and prefix-bucket counts use member-weighted sums
-    *    (`sum(fam_n)`), so the global rarest-first order, each document's
-    *    prefix cut, and the over-cap key set all match the full corpus —
+    * Output over the digest family is IDENTICAL to output over the
+    * identity family (spec-checked per kernel), because every per-member
+    * quantity is family-constant and re-derivable:
+    *
+    *  - shingle df and bucket populations are member-weighted (Σ `fam_n`,
+    *    [[weight]]), so the global rarest-first order, each document's
+    *    prefix cut, and the over-cap key sets all match the full corpus —
     *    a member's (r, s) prefix row equals its representative's;
     *  - a cross-family candidate (a∈A, b∈B) exists iff the (rep_A, rep_B)
-    *    candidate exists (identical shingle sets ⇒ identical join keys and
-    *    PPJoin filter outcomes), and its verified score is the reps' score
-    *    — so rep pairs expand through the member frame;
-    *  - a within-family pair is a candidate iff some surviving capped
-    *    prefix key self-joins past the positional filter with r1 = r2 = r,
-    *    s1 = s2 = s: `1 + s − r ≥ 2s·t/(1+t)` — evaluated per family on
-    *    the rep's surviving prefix rows; qualifying families emit all
-    *    member pairs at J = 1.0 (byte-identical sets), non-qualifying
-    *    ones none (the documented capped-recall trade: viral families are
-    *    [[exactDuplicates]]' job).
+    *    candidate exists (identical shingle sets ⇒ identical join keys,
+    *    band keys and filter outcomes), and its verified score is the
+    *    reps' score — so rep pairs expand through the member frame;
+    *  - a within-family pair is a candidate iff the rep passes its
+    *    kernel's self-join condition — for Jaccard, some surviving capped
+    *    prefix key self-joins past the positional filter with
+    *    r1 = r2 = r, s1 = s2 = s: `1 + s − r ≥ 2s·t/(1+t)`; qualifying
+    *    families emit all member pairs at similarity 1.0 (byte-identical
+    *    sets), non-qualifying ones none (the documented capped-recall
+    *    trade: viral families are [[exactDuplicates]]' job).
     */
+  private[graft] final case class Families(fams: DataFrame, members: DataFrame,
+                                           repDocs: DataFrame, identity: Boolean) {
+
+    /** A rep row's family size: the literal 1, or the `fam_n` column. */
+    def weight: Column = if (identity) lit(1L) else col("fam_n")
+
+    /** `rows` (keyed by a rep `doc_id`) with its `fam_n`; as is under identity. */
+    def weigh(rows: DataFrame): DataFrame =
+      if (identity) rows
+      else rows.join(fams.select(col("rep_id").as("doc_id"), col("fam_n")), "doc_id")
+
+    /** Shared-caches a rep-level frame the digest family's kernel reads
+      * more than once: the warm path reads the capped prefix straight from
+      * memory (the cap aggregate + anti-join measured ~0.9 s/run on the
+      * planted fixture when recomputed), while the cold build derives it
+      * cheaply from the shared ranked cache. Identity frames stay as they
+      * are: uncapped (the only dispatched identity mode) they are filters
+      * over an already shared frame.
+      */
+    def shared(df: DataFrame): DataFrame = if (identity) df else Caches.shared(df)
+
+    /** The member pairs of the rep pairs `repPairs` (`id1 < id2`, values):
+      * each expanded to the member pairs of its two families (`swapped`
+      * value columns trade places where member order flips the reps' — an
+      * asymmetric score), plus the pairs within each family of `reps`
+      * (`rep_id`, columns `within` reads) valued by `within`. Under
+      * identity: `repPairs` itself, no join planned.
+      */
+    def memberPairs(repPairs: DataFrame, reps: => DataFrame, within: Seq[Column],
+                    swapped: Map[String, String] = Map.empty): DataFrame =
+      if (identity) repPairs
+      else expand(repPairs, swapped).unionByName(withinPairs(reps, within))
+
+    private def expand(repPairs: DataFrame, swapped: Map[String, String]): DataFrame = {
+      val m = members.select(col("rep_id"), col("doc_id"))
+      val fwd = col("a") < col("b") // member order agrees with rep order
+      val values = repPairs.columns.filterNot(Set("id1", "id2")).map(c =>
+        swapped.get(c).fold(col(c))(o => when(fwd, col(c)).otherwise(col(o)).as(c)))
+      repPairs
+        .join(m.select(col("rep_id").as("id1"), col("doc_id").as("a")), "id1")
+        .join(m.select(col("rep_id").as("id2"), col("doc_id").as("b")), "id2")
+        .select(least(col("a"), col("b")).as("id1") +:
+          greatest(col("a"), col("b")).as("id2") +: values.toSeq: _*)
+    }
+
+    private def withinPairs(reps: DataFrame, within: Seq[Column]): DataFrame = {
+      // no broadcast hint: the qualifying-family set is corpus-dependent
+      // (could be millions of small families) — let AQE pick the join side
+      val famMembers = members.join(reps, "rep_id")
+      famMembers.withColumnRenamed("doc_id", "a")
+        .join(famMembers.select(col("rep_id"), col("doc_id").as("b")), "rep_id")
+        .where(col("a") < col("b"))
+        .select(col("a").as("id1") +: col("b").as("id2") +: within: _*)
+    }
+  }
+
   /** Byte-identical family resolution — the shared front half of every
-    * digest-first path (capped Jaccard, capped containment,
-    * [[Duplicates.components]]): one linear digest shuffle. Returns
-    * `(fams, members, repDocs)`:
-    *
-    *  - `fams` (cached): one row per family — `(digest, rep_id, fam_n)`
-    *    with `rep_id = min(doc_id)`;
-    *  - `members` (cached): the expansion frame — `(doc_id, rep_id,
-    *    fam_n)` for every document;
-    *  - `repDocs`: the input restricted to one representative per family.
-    *
-    * The digest frame itself is cached so fams and members share ONE md5
-    * scan of the corpus.
+    * digest-first path (the pair kernels over [[Families]],
+    * [[Duplicates.components]]): one linear digest shuffle. `fams` also
+    * carries the `digest`; `fams` and `members` are cached, and so is the
+    * digest frame itself, so they share ONE md5 scan of the corpus.
     */
-  private[graft] def digestFamilies(docs: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def digestFamilies(docs: DataFrame): Families = {
     // null-text docs must NOT collapse into one "byte-identical" family
     // (md5(null) = null would group them); a per-doc digest keeps each a
     // singleton, which is also what the member-level plans compute for
@@ -348,84 +369,70 @@ object Dedup {
     val members = Caches.shared(
       digests.join(fams, "digest").select("doc_id", "rep_id", "fam_n"))
     val repDocs = docs.join(fams.select(col("rep_id").as("doc_id")), "doc_id")
-    (fams, members, repDocs)
+    Families(fams, members, repDocs, identity = false)
   }
 
-  private[graft] def jaccardPairsDigestFirst(docs: DataFrame, threshold: Double,
-                                             maxShingleDf: Int): DataFrame = {
+  /** Every document its own family — the member-level plan; no digest
+    * pass (the kernels read only `repDocs` = `docs`).
+    */
+  private[graft] def identityFamilies(docs: DataFrame): Families = {
+    val members = docs.select(col("doc_id"), col("doc_id").as("rep_id"), lit(1L).as("fam_n"))
+    Families(members.drop("doc_id"), members, docs, identity = true)
+  }
+
+  /** [[jaccardPairs]] over the family `f`: PPJoin candidates and the
+    * exact verify over `f`'s reps, then [[Families.memberPairs]] with the
+    * positional within-family rule.
+    */
+  private[graft] def jaccardPairsOver(f: Families, threshold: Double,
+                                      maxShingleDf: Int): DataFrame = {
     val tEff = math.max(0.0, threshold - 1e-6)
-    val (fams, members, repDocs) = digestFamilies(docs)
-    // shared threshold-independent rep-level ranked index (r14): both
-    // digest arms (capped Jaccard x2b, capped containment x36b) consume
-    // the identical dfs-join + double-window subtree — one cached build
-    val ranked = famRankedShingles(fams, repDocs)
-    val prefix = ranked
-      .where(col("r") <= col("s") - ceil(col("s") * tEff) + 1)
-      .select("doc_id", "h60", "r", "s", "fam_n")
-    // member-weighted prefix-bucket counts reproduce capBuckets' drop set;
-    // maxShingleDf = 0 is uncapped mode (the [[digestArmUncapped]]
-    // dispatch) — no drop set at all, matching capBuckets' 0 = disabled.
-    // Cached ON TOP of the shared `ranked`: the warm path reads the capped
-    // prefix straight from memory (the cap aggregate + anti-join measured
-    // ~0.9 s/run on the planted fixture when recomputed), while the cold
-    // build derives it cheaply from the ranked cache instead of a second
-    // full dfs+window pass.
-    val capped = Caches.shared(
-      if (maxShingleDf <= 0) prefix
-      else {
-        val oversized = prefix.groupBy("h60").agg(sum("fam_n").as("bucket_n"))
-          .where(col("bucket_n") > maxShingleDf).select("h60")
-        prefix.join(broadcast(oversized), Seq("h60"), "left_anti")
-      })
-    // rep-level candidates: the same PPJoin length + positional filters
-    val alpha = lit(tEff / (1.0 + tEff)) * (col("s1") + col("s2"))
-    val candidates = capped.select(col("doc_id").as("id1"), col("h60"),
-        col("r").as("r1"), col("s").as("s1"))
-      .join(capped.select(col("doc_id").as("id2"), col("h60"),
-        col("r").as("r2"), col("s").as("s2")), "h60")
-      .where(col("id1") < col("id2"))
-      .where(least(col("s1"), col("s2")) >= lit(tEff) * greatest(col("s1"), col("s2")))
-      .where(lit(1) + least(col("s1") - col("r1"), col("s2") - col("r2")) >= alpha)
-      .select("id1", "id2").distinct()
-    // verify on reps only — the quadratic family fan-out never reaches here
-    val arrays = shingleArrays(distinctShingleHashes(repDocs))
-    val repPairs = candidates
-      .join(arrays.select(col("doc_id").as("id1"), col("hs").as("hs1"),
-        col("n").as("s1")), "id1")
-      .join(arrays.select(col("doc_id").as("id2"), col("hs").as("hs2"),
-        col("n").as("s2")), "id2")
-      .select(col("id1"), col("id2"),
-        size(array_intersect(col("hs1"), col("hs2"))).as("inter"),
-        col("s1"), col("s2"))
+    // the shingle subtree is referenced three times (arrays + the prefix
+    // index); the shared cache in [[distinctShingleHashes]] keeps it to
+    // one run
+    val capped = jaccardPrefix(f, tEff, maxShingleDf)
+    val repPairs = verifyOverArrays(prefixJoin(capped, tEff),
+        shingleArrays(distinctShingleHashes(f.repDocs)))
       .select(col("id1"), col("id2"),
         round(col("inter").cast("double") / (col("s1") + col("s2") - col("inter")), 6)
           .as("jaccard"))
       .where(col("jaccard") >= threshold)
-    val cross = repPairs
-      .join(members.select(col("rep_id").as("id1"), col("doc_id").as("a")), "id1")
-      .join(members.select(col("rep_id").as("id2"), col("doc_id").as("b")), "id2")
-      .select(least(col("a"), col("b")).as("id1"),
-        greatest(col("a"), col("b")).as("id2"), col("jaccard"))
-    // families whose surviving prefix rows self-join past the positional
-    // filter (r1 = r2, s1 = s2) — their members are mutual candidates
-    val selfQualifying = capped
-      .where(lit(1) + col("s") - col("r") >=
-        lit(2.0 * tEff / (1.0 + tEff)) * col("s"))
-      .select(col("doc_id").as("rep_id")).distinct()
-      .join(fams.where(col("fam_n") > 1).select("rep_id"), "rep_id")
-    // no broadcast hint: the qualifying-family set is corpus-dependent
-    // (could be millions of small families) — let AQE pick the join side
-    val famMembers = members.join(selfQualifying, "rep_id")
-    val within = famMembers.select(col("rep_id"), col("doc_id").as("a"))
-      .join(famMembers.select(col("rep_id"), col("doc_id").as("b")), "rep_id")
-      .where(col("a") < col("b"))
-      .select(col("a").as("id1"), col("b").as("id2"),
-        lit(1.0).as("jaccard"))
-    cross.union(within)
+    f.memberPairs(repPairs,
+      capped.where(lit(1) + col("s") - col("r") >= lit(2.0 * tEff / (1.0 + tEff)) * col("s"))
+        .select(col("doc_id").as("rep_id")).distinct()
+        .join(f.fams.where(col("fam_n") > 1).select("rep_id"), "rep_id"),
+      Seq(lit(1.0).as("jaccard")))
   }
 
+  /** Candidate rows `(id1, id2, …)` plus `inter` = |hs1 ∩ hs2| and the
+    * set sizes `s1`, `s2` from the shingle-set arrays ([[shingleArrays]]):
+    * two equi-joins on doc_id and a per-row `array_intersect` per
+    * candidate — versus an expand-join form that re-shuffles
+    * |shingles(id1)| rows per candidate through an (id2, h60) join and a
+    * groupBy. Candidates are pruned, so few pairs reach here.
+    */
+  private def verifyOverArrays(candidates: DataFrame, arrays: DataFrame): DataFrame =
+    candidates
+      .join(arrays.select(col("doc_id").as("id1"), col("hs").as("hs1"),
+        col("n").as("s1")), "id1")
+      .join(arrays.select(col("doc_id").as("id2"), col("hs").as("hs2"),
+        col("n").as("s2")), "id2")
+      .select(candidates.columns.toSeq.map(col) ++ Seq(
+        size(array_intersect(col("hs1"), col("hs2"))).as("inter"),
+        col("s1"), col("s2")): _*)
+
+  /** Each rep's rarest-first Jaccard prefix — its first `s − ⌈t·s⌉ + 1`
+    * ranked rows (`r`/`s` ride along for the length/positional filters) —
+    * minus the member-weighted over-cap keys.
+    */
+  private def jaccardPrefix(f: Families, tEff: Double, maxShingleDf: Int): DataFrame =
+    f.shared(capBuckets(
+      rankedShingles(f).where(col("r") <= col("s") - ceil(col("s") * tEff) + 1),
+      Seq("h60"), maxShingleDf, f.weight))
+
   /** Distinct candidate pairs from the prefix-filtered (and optionally
-    * df-capped) shingle index — phase one of [[jaccardPairs]].
+    * df-capped) shingle index of `f`'s representatives — phase one of
+    * [[jaccardPairs]].
     *
     * Prefix filtering (Chaudhuri et al. 2006, "A Primitive Operator for
     * Similarity Joins"; Xiao et al. 2008, PPJoin): order every document's
@@ -440,17 +447,18 @@ object Dedup {
     * under t but *rounds* to t (which the verify phase would keep, like
     * the oracle does) is still generated.
     */
-  private[graft] def prefixCandidates(ds: DataFrame, threshold: Double,
+  private[graft] def prefixCandidates(f: Families, threshold: Double,
                                       maxShingleDf: Int = 0): DataFrame = {
     val tEff = math.max(0.0, threshold - 1e-6)
-    // `r` (the shingle's 1-based rank in the doc's rarest-first order) and
-    // `s` (the doc's set size) ride along into the join: they drive the
-    // prefix cut here and the length/positional filters below. The ranked
-    // index is the shared cached frame (threshold applies as a filter).
-    val prefix = rankedShingles(ds)
-      .where(col("r") <= col("s") - ceil(col("s") * tEff) + 1)
-      .select("doc_id", "h60", "r", "s")
-    val capped = capBuckets(prefix, Seq("h60"), maxShingleDf)
+    prefixJoin(jaccardPrefix(f, tEff, maxShingleDf), tEff)
+  }
+
+  /** The candidate self-join of [[prefixCandidates]] over capped prefix
+    * rows: `r` (the shingle's 1-based rank in the doc's rarest-first
+    * order) and `s` (the doc's set size) ride along into the join for the
+    * length/positional filters.
+    */
+  private def prefixJoin(capped: DataFrame, tEff: Double): DataFrame = {
     // PPJoin's two exact per-match prunes (Xiao et al. 2008), applied before
     // the dedup so the quadratic fan-out dies at the join:
     //  - length filter: J ≥ t forces min(s1,s2)/max(s1,s2) ≥ t;
@@ -496,42 +504,18 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, threshold: Double = 0.6,
                        maxShingleDf: Int = 0): DataFrame =
-    if (maxShingleDf > 0) containmentPairsDigestFirst(docs, threshold, maxShingleDf)
-    else if (digestArmUncapped(docs)) containmentPairsDigestFirst(docs, threshold, 0)
-    else containmentPairsMembers(docs, threshold, maxShingleDf)
+    containmentPairsOver(familiesFor(docs, maxShingleDf > 0), threshold, maxShingleDf)
 
-  /** The member-level plan: exact mode's only path, and the equality
-    * reference [[containmentPairsDigestFirst]] is spec-checked against.
-    */
-  private[graft] def containmentPairsMembers(docs: DataFrame, threshold: Double = 0.6,
-                                             maxShingleDf: Int = 0): DataFrame = {
-    val ds = distinctShingleHashes(docs)
-    val arrays = shingleArrays(ds)
-    containmentCandidates(ds, threshold, maxShingleDf)
-      .join(arrays.select(col("doc_id").as("id1"), col("hs").as("hs1"),
-        col("n").as("s1")), "id1")
-      .join(arrays.select(col("doc_id").as("id2"), col("hs").as("hs2"),
-        col("n").as("s2")), "id2")
-      .select(col("id1"), col("id2"),
-        size(array_intersect(col("hs1"), col("hs2"))).as("inter"),
-        col("s1"), col("s2"))
-      .select(col("id1"), col("id2"), col("s1"), col("s2"),
-        round(col("inter").cast("double") / col("s1"), 6).as("c1"),
-        round(col("inter").cast("double") / col("s2"), 6).as("c2"),
-        round(col("inter").cast("double") / least(col("s1"), col("s2")), 6)
-          .as("containment"))
-      .where(col("containment") >= threshold)
-  }
-
-  /** Capped-mode [[containmentPairs]] with the digest-first short-circuit —
-    * the same move as [[jaccardPairsDigestFirst]], needed for the same
-    * reason: a byte-identical family of f documents makes the candidate
-    * join emit O(f²) pairs per family and the verify pass recompute the
-    * same intersection f²/2 times (10× smoke before: 45 s cold / 60 s
-    * warm). Families resolve via one linear digest shuffle; the one-sided
-    * prefix⋈full machinery runs on representatives with member-weighted
-    * dfs and bucket counts (so the rarest-first order and both drop sets
-    * equal the full corpus's); rep pairs expand through the member frame.
+  /** [[containmentPairs]] over the family `f`. Candidates: each rep's
+    * rarest-first prefix (cut at `s − ⌈t·s⌉ + 1`, the containment-side
+    * bound) joined against the FULL index — the contained side only needs
+    * its own prefix indexed, but the containing side must stay whole (its
+    * size gives no bound on which of its shingles the small side hits).
+    * Both orientations come out of the one join because every document
+    * appears on both sides. No length filter applies (containment has no
+    * size-ratio constraint — that asymmetry is the point); the candidate
+    * threshold backs off by the 6-dp rounding margin like
+    * [[prefixCandidates]].
     *
     * Containment is ASYMMETRIC, so expansion is orientation-aware: a rep
     * row (r1 < r2, s1, s2, c1, c2) expands to member pair (a, b) with the
@@ -541,108 +525,43 @@ object Dedup {
     * BOTH caps — exactly the member-level candidate condition with no
     * positional filter to model.
     */
-  private[graft] def containmentPairsDigestFirst(docs: DataFrame, threshold: Double,
-                                                 maxShingleDf: Int): DataFrame = {
+  private[graft] def containmentPairsOver(f: Families, threshold: Double,
+                                          maxShingleDf: Int): DataFrame = {
     val tEff = math.max(0.0, threshold - 1e-6)
-    val (fams, members, repDocs) = digestFamilies(docs)
-    // one cached rep-level ranked index (r14) instead of materializing the
-    // prefix AND full row sets separately — prefix is a filter over it,
-    // and the same cached frame serves the Jaccard digest arm (x2b)
-    val ranked = famRankedShingles(fams, repDocs)
-    val prefix = ranked.where(col("r") <= col("s") - ceil(col("s") * tEff) + 1)
-      .select("doc_id", "h60", "fam_n")
-    val full = ranked.select("doc_id", "h60", "fam_n")
-    // maxShingleDf = 0 (uncapped dispatch mode): no drop sets, as in
-    // [[jaccardPairsDigestFirst]]. Both sides stay cached (the warm
-    // candidate join reads them twice), but they now DERIVE from the one
-    // shared ranked cache instead of each materializing its own
-    // dfs+double-window subtree.
-    def capSide(rows: DataFrame): DataFrame = Caches.shared(
-      if (maxShingleDf <= 0) rows
-      else {
-        val overCap = rows.groupBy("h60").agg(sum("fam_n").as("bucket_n"))
-          .where(col("bucket_n") > maxShingleDf).select("h60")
-        rows.join(broadcast(overCap), Seq("h60"), "left_anti")
-      })
-    val cappedP = capSide(prefix)
-    val cappedF = capSide(full)
+    // the same shared ranked index as [[prefixCandidates]] — one cached
+    // build serves both the Jaccard and containment candidate generators;
+    // the prefix is a filter over it, the full side a projection. The
+    // digest family caches both capped sides (the warm candidate join
+    // reads them twice), each derived from the one ranked cache.
+    val ranked = rankedShingles(f)
+    def capSide(rows: DataFrame): DataFrame =
+      f.shared(capBuckets(rows.drop("r", "s"), Seq("h60"), maxShingleDf, f.weight))
+    val cappedP = capSide(ranked.where(col("r") <= col("s") - ceil(col("s") * tEff) + 1))
+    val cappedF = capSide(ranked)
     val candidates = cappedP.select(col("doc_id").as("ida"), col("h60"))
       .join(cappedF.select(col("doc_id").as("idb"), col("h60")), "h60")
       .where(col("ida") =!= col("idb"))
       .select(least(col("ida"), col("idb")).as("id1"),
         greatest(col("ida"), col("idb")).as("id2"))
       .distinct()
-    val arrays = shingleArrays(distinctShingleHashes(repDocs))
-    val repPairs = candidates
-      .join(arrays.select(col("doc_id").as("id1"), col("hs").as("hs1"),
-        col("n").as("s1")), "id1")
-      .join(arrays.select(col("doc_id").as("id2"), col("hs").as("hs2"),
-        col("n").as("s2")), "id2")
-      .select(col("id1"), col("id2"),
-        size(array_intersect(col("hs1"), col("hs2"))).as("inter"),
-        col("s1"), col("s2"))
+    val arrays = shingleArrays(distinctShingleHashes(f.repDocs))
+    val repPairs = verifyOverArrays(candidates, arrays)
       .select(col("id1"), col("id2"), col("s1"), col("s2"),
         round(col("inter").cast("double") / col("s1"), 6).as("c1"),
         round(col("inter").cast("double") / col("s2"), 6).as("c2"),
         round(col("inter").cast("double") / least(col("s1"), col("s2")), 6)
           .as("containment"))
       .where(col("containment") >= threshold)
-    val expanded = repPairs
-      .join(members.select(col("rep_id").as("id1"), col("doc_id").as("a")), "id1")
-      .join(members.select(col("rep_id").as("id2"), col("doc_id").as("b")), "id2")
-    val fwd = col("a") < col("b") // member order agrees with rep order
-    val cross = expanded.select(
-      least(col("a"), col("b")).as("id1"),
-      greatest(col("a"), col("b")).as("id2"),
-      when(fwd, col("s1")).otherwise(col("s2")).as("s1"),
-      when(fwd, col("s2")).otherwise(col("s1")).as("s2"),
-      when(fwd, col("c1")).otherwise(col("c2")).as("c1"),
-      when(fwd, col("c2")).otherwise(col("c1")).as("c2"),
-      col("containment"))
     // within-family: candidate iff some prefix key of the rep survives
     // BOTH drop sets (prefix side AND full side)
-    val selfQualifying = cappedP
-      .join(cappedF.select("doc_id", "h60"), Seq("doc_id", "h60"), "left_semi")
-      .select(col("doc_id").as("rep_id")).distinct()
-      .join(fams.where(col("fam_n") > 1).select("rep_id"), "rep_id")
-      .join(arrays.select(col("doc_id").as("rep_id"), col("n")), "rep_id")
-    val famMembers = members.join(selfQualifying, "rep_id")
-    val within = famMembers.select(col("rep_id"), col("doc_id").as("a"), col("n"))
-      .join(famMembers.select(col("rep_id"), col("doc_id").as("b")), "rep_id")
-      .where(col("a") < col("b"))
-      .select(col("a").as("id1"), col("b").as("id2"),
-        col("n").as("s1"), col("n").as("s2"),
-        lit(1.0).as("c1"), lit(1.0).as("c2"), lit(1.0).as("containment"))
-    cross.union(within)
-  }
-
-  /** Candidate pairs for [[containmentPairs]]: each document's rarest-first
-    * prefix (cut at `s − ⌈t·s⌉ + 1`, the containment-side bound) joined
-    * against the FULL index — the contained side only needs its own prefix
-    * indexed, but the containing side must stay whole (its size gives no
-    * bound on which of its shingles the small side hits). Both orientations
-    * come out of the one join because every document appears on both sides.
-    * No length filter applies (containment has no size-ratio constraint —
-    * that asymmetry is the point); the candidate threshold backs off by the
-    * 6-dp rounding margin like [[prefixCandidates]].
-    */
-  private[graft] def containmentCandidates(ds: DataFrame, threshold: Double,
-                                           maxShingleDf: Int = 0): DataFrame = {
-    val tEff = math.max(0.0, threshold - 1e-6)
-    // same shared ranked index as [[prefixCandidates]] — one cached build
-    // serves both the Jaccard and containment candidate generators
-    val ranked = rankedShingles(ds)
-    val prefix = ranked.where(col("r") <= col("s") - ceil(col("s") * tEff) + 1)
-      .select("doc_id", "h60")
-    val full = ranked.select("doc_id", "h60")
-    capBuckets(prefix, Seq("h60"), maxShingleDf)
-      .select(col("doc_id").as("ida"), col("h60"))
-      .join(capBuckets(full, Seq("h60"), maxShingleDf)
-        .select(col("doc_id").as("idb"), col("h60")), "h60")
-      .where(col("ida") =!= col("idb"))
-      .select(least(col("ida"), col("idb")).as("id1"),
-        greatest(col("ida"), col("idb")).as("id2"))
-      .distinct()
+    f.memberPairs(repPairs,
+      cappedP.join(cappedF.select("doc_id", "h60"), Seq("doc_id", "h60"), "left_semi")
+        .select(col("doc_id").as("rep_id")).distinct()
+        .join(f.fams.where(col("fam_n") > 1).select("rep_id"), "rep_id")
+        .join(arrays.select(col("doc_id").as("rep_id"), col("n")), "rep_id"),
+      Seq(col("n").as("s1"), col("n").as("s2"),
+        lit(1.0).as("c1"), lit(1.0).as("c2"), lit(1.0).as("containment")),
+      swapped = Map("s1" -> "s2", "s2" -> "s1", "c1" -> "c2", "c2" -> "c1"))
   }
 
   /** The naive single-join form (every co-shingled pair aggregates |∩|
@@ -708,6 +627,17 @@ object Dedup {
               lit(Prime))))).as("signature"))
   }
 
+  /** `(doc_id, band_idx, band_key)` rows for a signature frame — the LSH
+    * bucket keys both the batch pair join and the streaming admission
+    * state are built on.
+    */
+  private[graft] def bandRows(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"),
+        posexplode(transform(sequence(lit(0), lit(NumBands - 1)), b =>
+          md5Long60(concat_ws("_", b,
+            slice(col("signature"), b * RowsPerBand + 1, lit(RowsPerBand)))))))
+      .toDF("doc_id", "band_idx", "band_key")
+
   /** MinHash-LSH candidate pairs with estimated Jaccard = fraction of
     * agreeing signature positions. Candidates come only from band-bucket
     * collisions (8 bands × 4 rows), so the join never goes quadratic in the
@@ -721,22 +651,10 @@ object Dedup {
     * are dropped from candidate generation; giant identical families are
     * [[exactDuplicates]]' job, and genuine near-dups inside a dropped
     * bucket still collide in their other 7, typically smaller, bands.
-    */
-  /** `(doc_id, band_idx, band_key)` rows for a signature frame — the LSH
-    * bucket keys both the batch pair join and the streaming admission
-    * state are built on.
-    */
-  private[graft] def bandRows(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(NumBands - 1)), b =>
-          md5Long60(concat_ws("_", b,
-            slice(col("signature"), b * RowsPerBand + 1, lit(RowsPerBand)))))))
-      .toDF("doc_id", "band_idx", "band_key")
-
-  /** Arm dispatch, mirroring [[jaccardPairs]]': capped mode always runs
-    * digest-first (capping exists because the corpus is duplicate-heavy,
-    * which is exactly where the collapse wins), and uncapped mode routes
-    * through the same dup-mass probe ([[digestArmUncapped]] — one linear
+    *
+    * Family dispatch, shared with [[jaccardPairs]] ([[familiesFor]]):
+    * capped mode always runs digest-first, and uncapped mode routes
+    * through the dup-mass probe ([[digestArmUncapped]] — one linear
     * aggregate over the suite-shared digest frame). This automates the
     * x78 bucket ledger's only actionable reading: the ledger saturates
     * (every band bucket at its cap, Σ min(size,cap)²/2 candidate work)
@@ -747,31 +665,17 @@ object Dedup {
     * mode's job, because in exact mode that corpus's quadratic cost is
     * its OUTPUT (all those pairs are genuine near-duplicates) — no
     * output-preserving routing can avoid it. An A/B run of the two arms
-    * calls [[minhashLshPairsMembers]]/[[minhashLshPairsDigestFirst]]
-    * directly.
+    * calls [[lshPairsOver]] with [[identityFamilies]] or
+    * [[digestFamilies]].
     */
   def minhashLshPairs(docs: DataFrame, minEstJaccard: Double = 0.5,
                       maxBucketSize: Int = 0): DataFrame =
-    if (maxBucketSize > 0) minhashLshPairsDigestFirst(docs, minEstJaccard, maxBucketSize)
-    else if (digestArmUncapped(docs)) minhashLshPairsDigestFirst(docs, minEstJaccard, 0)
-    else minhashLshPairsMembers(docs, minEstJaccard, maxBucketSize)
+    lshPairsOver(familiesFor(docs, maxBucketSize > 0), minEstJaccard, maxBucketSize)
 
-  /** The member-level LSH plan: signatures and band buckets over every
-    * document — the reference arm the digest-first plan is spec-pinned
-    * against.
-    */
-  private[graft] def minhashLshPairsMembers(docs: DataFrame,
-                                            minEstJaccard: Double = 0.5,
-                                            maxBucketSize: Int = 0): DataFrame = {
-    val sigs = Caches.shared(minhashSignatures(docs))
-    val bands = capBuckets(bandRows(sigs), Seq("band_idx", "band_key"), maxBucketSize)
-    lshVerifiedPairs(sigs, bands, minEstJaccard)
-  }
-
-  /** [[minhashLshPairs]]' digest-first arm (the x2b/x45c move applied to
-    * the PAIRS output): byte-identical families collapse to one
-    * representative before signatures, the LSH band join runs on the rep
-    * graph, and the member-level pair list is reconstructed exactly:
+  /** [[minhashLshPairs]] over the family `f` (the x2b/x45c move applied to
+    * the PAIRS output): signatures and the LSH band join run on `f`'s
+    * representatives, then [[Families.memberPairs]] rebuilds the
+    * member-level pair list exactly:
     *
     *  - within-family pairs: identical docs share signatures, so at
     *    member level every family pair is a band collision with
@@ -787,69 +691,46 @@ object Dedup {
     *  - cross-family pairs: a member pair (a∈f1, b∈f2) collides in a band
     *    iff the rep pair does, with the same signature estimate — rep
     *    pairs expand through two members joins, output-proportional;
-    *  - bucket capping is member-weighted ([[memberWeightedCapBands]]):
-    *    Σ fam_n per bucket IS the member-level bucket population, so the
-    *    drop set matches [[capBuckets]]' exactly (the x45c argument,
-    *    spec-pinned here for the pairs output too).
+    *  - bucket capping is member-weighted ([[lshBands]]).
     *
-    * On the byte-twins pathology (every doc in a K-strong family) this
-    * turns the banded join's Σ min(size,cap)²/2 saturation into a linear
-    * digest collapse + a rep-level join over K× fewer rows.
+    * On the byte-twins pathology (every doc in a K-strong family) the
+    * digest family turns the banded join's Σ min(size,cap)²/2 saturation
+    * into a linear digest collapse + a rep-level join over K× fewer rows.
     */
-  private[graft] def minhashLshPairsDigestFirst(docs: DataFrame,
-                                                minEstJaccard: Double,
-                                                maxBucketSize: Int): DataFrame = {
-    val (fams, members, repDocs) = digestFamilies(docs)
-    val sigs = Caches.shared(minhashSignatures(repDocs))
-    val bands = Caches.shared(
-      memberWeightedCapBands(bandRows(sigs), fams, maxBucketSize))
-    val m = members.select(col("rep_id"), col("doc_id"))
-    val cross = lshVerifiedPairs(sigs, bands, minEstJaccard)
-      .select(col("id1").as("r1"), col("id2").as("r2"), col("est_jaccard"))
-      .join(m.select(col("rep_id").as("r1"), col("doc_id").as("a")), "r1")
-      .join(m.select(col("rep_id").as("r2"), col("doc_id").as("b")), "r2")
-      .select(least(col("a"), col("b")).as("id1"),
-        greatest(col("a"), col("b")).as("id2"), col("est_jaccard"))
-    val famsWithBands = bands.select(col("doc_id").as("rep_id")).distinct()
-    val wm = m.join(famsWithBands, "rep_id")
-    val within = wm.select(col("rep_id"), col("doc_id").as("id1"))
-      .join(wm.select(col("rep_id"), col("doc_id").as("id2")), "rep_id")
-      .where(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"), lit(1.0d).as("est_jaccard"))
-    cross.unionByName(within)
+  private[graft] def lshPairsOver(f: Families, minEstJaccard: Double,
+                                  maxBucketSize: Int): DataFrame = {
+    val (sigs, bands) = lshBands(f, maxBucketSize)
+    f.memberPairs(lshVerifiedPairs(sigs, bands, minEstJaccard),
+      bands.select(col("doc_id").as("rep_id")).distinct(),
+      Seq(lit(1.0d).as("est_jaccard")))
   }
 
-  /** Drop band buckets whose MEMBER-level population (Σ fam_n of the
+  /** Shared-cached signatures of `f`'s representatives and their band
+    * rows minus the buckets whose MEMBER-level population (Σ fam_n of the
     * colliding families — identical docs carry identical band keys)
-    * exceeds `maxBucketSize`: the digest-first arms' exact reproduction
-    * of [[capBuckets]]' drop set. 0 disables, as everywhere.
+    * exceeds `maxBucketSize`: [[capBuckets]]' drop set over the whole
+    * corpus, reproduced from the reps. 0 disables, as everywhere. The
+    * front half of [[lshPairsOver]] and [[minhashDedupDigestFirst]].
     *
     * The broadcast drop set is bounded exactly as in [[capBuckets]]:
     * each oversized bucket covers > `maxBucketSize` MEMBERS, so there are
-    * at most (NumBands · member count)/maxBucketSize of them — and here
-    * the frame is additionally rep-level, the byte-identical mass having
-    * already collapsed in [[digestFamilies]], so the band-row count this
-    * runs over is families, not documents.
+    * at most (NumBands · member count)/maxBucketSize of them — and over
+    * the digest family the frame is additionally rep-level, the
+    * byte-identical mass having already collapsed in [[digestFamilies]],
+    * so the band-row count this runs over is families, not documents.
     */
-  private[graft] def memberWeightedCapBands(bandsRaw: DataFrame, fams: DataFrame,
-                                            maxBucketSize: Int): DataFrame =
-    if (maxBucketSize <= 0) bandsRaw
-    else {
-      val weighted = bandsRaw
-        .join(fams.select(col("rep_id").as("doc_id"), col("fam_n")), "doc_id")
-      val oversized = weighted.groupBy("band_idx", "band_key")
-        .agg(sum("fam_n").as("bucket_n"))
-        .where(col("bucket_n") > maxBucketSize)
-        .select("band_idx", "band_key")
-      bandsRaw.join(broadcast(oversized), Seq("band_idx", "band_key"), "left_anti")
-    }
+  private def lshBands(f: Families, maxBucketSize: Int): (DataFrame, DataFrame) = {
+    val sigs = Caches.shared(minhashSignatures(f.repDocs))
+    (sigs, f.shared(capBuckets(bandRows(sigs), Seq("band_idx", "band_key"),
+      maxBucketSize, f.weight, f.weigh)))
+  }
 
   /** Band-bucket candidate pairs (`id1 < id2`) from a pre-capped bands
     * frame, verified by signature agreement — the ONE copy of the LSH
     * self-join shape and the est_jaccard formula, shared by
-    * [[minhashLshPairs]] and [[minhashDedupDigestFirst]] (whose only
-    * delta is member-weighted capping before this call), so a change to
-    * either can never silently break the x45c ≡ x45b hash equality.
+    * [[lshPairsOver]] and [[minhashDedupDigestFirst]] (which also share
+    * [[lshBands]]), so a change to either can never silently break the
+    * x45c ≡ x45b hash equality.
     */
   private def lshVerifiedPairs(sigs: DataFrame, bands: DataFrame,
                                minEstJaccard: Double): DataFrame = {
@@ -1087,9 +968,9 @@ object Dedup {
     *    rep components ARE member components restricted to reps;
     *  - the member-level component label is its min doc_id; reps are
     *    family minima, so min rep in a rep component = min member overall;
-    *  - bucket capping is member-weighted (`sum(fam_n)` per band bucket =
-    *    the member-level bucket population), reproducing the capped drop
-    *    set, and a family whose EVERY bucket was dropped contributes no
+    *  - bucket capping is member-weighted ([[lshBands]]: `sum(fam_n)` per
+    *    band bucket = the member-level bucket population), reproducing the
+    *    capped drop set, and a family whose EVERY bucket was dropped contributes no
     *    member pairs at all — its members stay singletons, which is why
     *    expansion collapses a family onto its rep's component only when
     *    at least one of its band rows survived.
@@ -1101,17 +982,15 @@ object Dedup {
                                              maxBucketSize: Int,
                                              maxCollectEdges: Long)
       : (DataFrame, String) = {
-    val (fams, members, repDocs) = digestFamilies(docs)
-    val sigs = Caches.shared(minhashSignatures(repDocs))
-    val bandsShared = Caches.shared(
-      memberWeightedCapBands(bandRows(sigs), fams, maxBucketSize))
-    val repPairs = lshVerifiedPairs(sigs, bandsShared, minEstJaccard)
+    val f = digestFamilies(docs)
+    val (sigs, bands) = lshBands(f, maxBucketSize)
+    val repPairs = lshVerifiedPairs(sigs, bands, minEstJaccard)
       .select("id1", "id2")
     val (repLabels, arm) = Duplicates.componentsFromPairs(
-      repDocs.select("doc_id"), repPairs, maxCollectEdges)
-    val connectedReps = bandsShared.select(col("doc_id").as("rep_id")).distinct()
+      f.repDocs.select("doc_id"), repPairs, maxCollectEdges)
+    val connectedReps = bands.select(col("doc_id").as("rep_id")).distinct()
       .withColumn("has_bands", lit(true))
-    val famLabeled = members
+    val famLabeled = f.members
       .join(repLabels.select(col("doc_id").as("rep_id"), col("component")), "rep_id")
       .join(connectedReps, Seq("rep_id"), "left")
       .select(col("doc_id"),
@@ -1663,30 +1542,22 @@ object Dedup {
 
   /** The member-level calibration: exact Jaccard per member-level LSH
     * candidate — the reference arm the rep-weighted plan is spec-pinned
-    * against (and the plan the DuckDB oracle expresses). Calls the
-    * members pair arm directly: the dispatch already decided, so a second
-    * dup-mass probe inside [[minhashLshPairs]] would be redundant.
+    * against (and the plan the DuckDB oracle expresses). Calls
+    * [[lshPairsOver]] over the identity family directly: the dispatch
+    * already decided, so a second dup-mass probe inside
+    * [[minhashLshPairs]] would be redundant.
     */
   private[graft] def minhashCalibrationMembers(docs: DataFrame,
                                                minEstJaccard: Double): DataFrame = {
-    val pairs = minhashLshPairsMembers(docs, minEstJaccard)
+    val pairs = lshPairsOver(identityFamilies(docs), minEstJaccard, 0)
       .select("id1", "id2", "est_jaccard")
     // exact verify over the shared per-doc shingle-set arrays (r14) — the
     // same cached frame the x2/x36 verifies read — instead of a private
-    // per-pair h60 expand join + re-aggregation: each candidate costs two
-    // equi-joins and one array_intersect, and |hs| == count(h60) per doc,
-    // so inter and the sizes are value-identical (a pair with zero shared
-    // shingles gets inter = 0 from the intersect, matching the old left
-    // join's coalesce)
-    val arrays = shingleArrays(distinctShingleHashes(docs))
-    val scored = pairs
-      .join(arrays.select(col("doc_id").as("id1"), col("hs").as("hs1"),
-        col("n").as("s1")), "id1")
-      .join(arrays.select(col("doc_id").as("id2"), col("hs").as("hs2"),
-        col("n").as("s2")), "id2")
-      .select(col("est_jaccard"),
-        size(array_intersect(col("hs1"), col("hs2"))).cast("long").as("inter"),
-        col("s1"), col("s2"))
+    // per-pair h60 expand join + re-aggregation: |hs| == count(h60) per
+    // doc, so inter and the sizes are value-identical (a pair with zero
+    // shared shingles gets inter = 0 from the intersect, matching the old
+    // left join's coalesce)
+    val scored = verifyOverArrays(pairs, shingleArrays(distinctShingleHashes(docs)))
       .select(col("est_jaccard"),
         round(col("inter").cast("double") /
           (col("s1") + col("s2") - col("inter")), 6).as("exact_j"),
@@ -1717,17 +1588,17 @@ object Dedup {
     */
   private[graft] def minhashCalibrationDigestFirst(docs: DataFrame,
                                                    minEstJaccard: Double): DataFrame = {
-    val (fams, _, repDocs) = digestFamilies(docs)
-    val sigs = Caches.shared(minhashSignatures(repDocs))
+    val f = digestFamilies(docs)
+    val sigs = Caches.shared(minhashSignatures(f.repDocs))
     val repPairs = lshVerifiedPairs(sigs, bandRows(sigs), minEstJaccard)
       .select(col("id1").as("r1"), col("id2").as("r2"), col("est_jaccard"))
-    val ds = distinctShingleHashes(repDocs)
+    val ds = distinctShingleHashes(f.repDocs)
     val sizes = ds.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = repPairs.select("r1", "r2")
       .join(ds.select(col("doc_id").as("r1"), col("h60")), "r1")
       .join(ds.select(col("doc_id").as("r2"), col("h60")), Seq("r2", "h60"))
       .groupBy("r1", "r2").agg(count(lit(1)).as("inter"))
-    val famN = fams.select(col("rep_id"), col("fam_n"))
+    val famN = f.fams.select(col("rep_id"), col("fam_n"))
     val cross = repPairs
       .join(inter, Seq("r1", "r2"), "left")
       .join(sizes.select(col("doc_id").as("r1"), col("n").as("s1")), "r1")

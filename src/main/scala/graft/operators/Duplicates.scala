@@ -147,7 +147,7 @@ object Duplicates {
     */
   private[graft] def pairSimilaritiesDigestFirst(docs: DataFrame,
                                                  threshold: Double): DataFrame = {
-    val (_, members, repDocs) = Dedup.digestFamilies(docs)
+    val Dedup.Families(_, members, repDocs, _) = Dedup.digestFamilies(docs)
     val repPairs = pairSimilaritiesMembers(repDocs, threshold)
     // Two scale guards on the expansion, both measured on the r12 100×
     // capstone fixture (524k rep pairs × 100-strong families ⇒ ~5.2e9
@@ -373,7 +373,7 @@ object Duplicates {
     val frameKey = if (key.nonEmpty) s"$key|cap=$maxCollectEdges" else ""
     val frameHit = labelsFrameMemo.get(frameKey, spark)
     if (frameHit.nonEmpty) return frameHit.get
-    val (_, members, repDocs) = Dedup.digestFamilies(docs)
+    val Dedup.Families(_, members, repDocs, _) = Dedup.digestFamilies(docs)
     // honor the caller's cap even on a memo hit: an explicit small cap is
     // a request to avoid the driver path, not just a cost heuristic
     val hit = edgeMemo.get(key).filter(_.length <= maxCollectEdges)
@@ -599,7 +599,7 @@ object Duplicates {
     */
   private[graft] def pairSummaryDigestFirst(docs: DataFrame,
                                             threshold: Double): DataFrame = {
-    val (fams, _, repDocs) = Dedup.digestFamilies(docs)
+    val Dedup.Families(fams, _, repDocs, _) = Dedup.digestFamilies(docs)
     val famN = fams.select(col("rep_id"), col("fam_n"))
     val cross = pairSimilaritiesMembers(repDocs, threshold)
       .join(famN.select(col("rep_id").as("id1"), col("fam_n").as("n1")), "id1")

@@ -302,10 +302,15 @@ object GraftFunctions {
           "unigram_viterbi(word, pieces, logps, max_len) - struct(n_pieces, score, pieces) of the Viterbi segmentation"),
         buildUnigramViterbi))
 
-  /** Register on an already-built session (temp functions, session-scoped). */
-  def register(spark: SparkSession): Unit =
+  /** Register on an already-built session (temp functions, session-scoped).
+    * Names the registry already holds are skipped: repeat calls log no
+    * "replaced a previously registered function" warning.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     descriptors.foreach { case (ident, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        ident.funcName, builder, "built-in")
+      if (!registry.functionExists(ident))
+        registry.createOrReplaceTempFunction(ident.funcName, builder, "built-in")
     }
+  }
 }

@@ -43,10 +43,11 @@ class DedupGuardSpec extends SparkSpec {
       .distinct()
     // uncapped full index (t = 0 degenerates the prefix to the whole set):
     // the boilerplate shingles alone connect every pair — C(42,2)
-    val exact = Dedup.prefixCandidates(ds, threshold = 0.0).count()
+    val exact = Dedup.prefixCandidates(Dedup.identityFamilies(docs), threshold = 0.0).count()
     assert(exact == 42L * 41 / 2, s"boilerplate should connect all pairs, got $exact")
     // capped at df 10: only pairs sharing a rare (df ≤ 10) shingle survive
-    val capped = Dedup.prefixCandidates(ds, threshold = 0.0, maxShingleDf = 10)
+    val capped = Dedup.prefixCandidates(Dedup.identityFamilies(docs), threshold = 0.0,
+        maxShingleDf = 10)
       .as[(Long, Long)].collect().toSet
     assert(capped.contains((40L, 41L)), "planted rare-shingle pair must stay a candidate")
     assert(capped.size < 5, s"capped candidates should be near-empty, got ${capped.size}")
@@ -83,9 +84,9 @@ class DedupGuardSpec extends SparkSpec {
       (100L, family), (101L, family), (102L, family),
       (103L, s"$family onemorewordzz")) // near-dup of the family, own digest
     val docs = hotShingleDocs.union(extra.toDF("doc_id", "text"))
-    val fromDigest = Dedup.jaccardPairsDigestFirst(docs, 0.5, maxShingleDf = 10)
+    val fromDigest = Dedup.jaccardPairsOver(Dedup.digestFamilies(docs), 0.5, maxShingleDf = 10)
       .as[(Long, Long, Double)].collect().toMap2
-    val fromMembers = Dedup.jaccardPairsMembers(docs, 0.5, maxShingleDf = 10)
+    val fromMembers = Dedup.jaccardPairsOver(Dedup.identityFamilies(docs), 0.5, maxShingleDf = 10)
       .as[(Long, Long, Double)].collect().toMap2
     assert(fromDigest == fromMembers,
       s"digest-first != member-level:\n only digest: ${fromDigest.toSet -- fromMembers.toSet}" +
@@ -108,17 +109,17 @@ class DedupGuardSpec extends SparkSpec {
       (103L, s"$family onemorewordzz"),
       (104L, family)) // id above the neighbor: flips member vs rep order
     val docs = hotShingleDocs.union(extra.toDF("doc_id", "text"))
-    val jd = Dedup.jaccardPairsDigestFirst(docs, 0.5, maxShingleDf = 0)
+    val jd = Dedup.jaccardPairsOver(Dedup.digestFamilies(docs), 0.5, maxShingleDf = 0)
       .as[(Long, Long, Double)].collect().toMap2
-    val jm = Dedup.jaccardPairsMembers(docs, 0.5, maxShingleDf = 0)
+    val jm = Dedup.jaccardPairsOver(Dedup.identityFamilies(docs), 0.5, maxShingleDf = 0)
       .as[(Long, Long, Double)].collect().toMap2
     assert(jd == jm,
       s"uncapped jaccard digest != members:\n only digest: ${jd.toSet -- jm.toSet}" +
       s"\n only members: ${jm.toSet -- jd.toSet}")
     assert(jd.get((100L, 104L)).contains(1.0), "within-family pair present")
-    val cd = Dedup.containmentPairsDigestFirst(docs, 0.6, maxShingleDf = 0)
+    val cd = Dedup.containmentPairsOver(Dedup.digestFamilies(docs), 0.6, maxShingleDf = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
-    val cm = Dedup.containmentPairsMembers(docs, 0.6, maxShingleDf = 0)
+    val cm = Dedup.containmentPairsOver(Dedup.identityFamilies(docs), 0.6, maxShingleDf = 0)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
     assert(cd == cm,
       s"uncapped containment digest != members:\n only digest: ${cd.keySet -- cm.keySet}" +
@@ -127,23 +128,31 @@ class DedupGuardSpec extends SparkSpec {
     assert(Dedup.digestArmUncapped(docs), "dup mass ~1/3 must dispatch digest-first")
   }
 
-  test("digest-first capped containment equals the member-level plan, " +
-       "orientation-aware expansion included") {
-    // family (100–102) + a SUBSUMING neighbor 103 (family text + extra
-    // words: C(member→103) = 1), plus the boilerplate corpus; also an id
-    // ABOVE the neighbor (104 identical to 100) so expansion must swap
-    // the s/c columns when member order flips relative to rep order
+  /** A byte-identical family (100–102) + a SUBSUMING neighbor 103 (family
+    * text + extra words: C(member→103) = 1), plus the boilerplate corpus;
+    * also an id ABOVE the neighbor (104 identical to 100) so expansion
+    * must swap the s/c columns when member order flips relative to rep
+    * order.
+    */
+  private def subsumedFamilyDocs: DataFrame = {
     val family = "identicalzz familyzz contentzz sequencezz alphazz betazz gammazz deltazz"
     val extra = Seq(
       (100L, family), (101L, family), (102L, family),
       (103L, s"$family morezz wordszz taggedzz onzz thezz endzz herezz"),
-      (104L, family)).toDF("doc_id", "text")
-    val docs = hotShingleDocs.union(extra.toDF("doc_id", "text"))
+      (104L, family))
+    hotShingleDocs.union(extra.toDF("doc_id", "text"))
+  }
+
+  test("digest-first capped containment equals the member-level plan, " +
+       "orientation-aware expansion included") {
+    val docs = subsumedFamilyDocs
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select("id1", "id2", "s1", "s2", "c1", "c2", "containment")
       .as[(Long, Long, Long, Long, Double, Double, Double)].collect().toSet
-    val fromDigest = canon(Dedup.containmentPairsDigestFirst(docs, 0.6, maxShingleDf = 10))
-    val fromMembers = canon(Dedup.containmentPairsMembers(docs, 0.6, maxShingleDf = 10))
+    val fromDigest = canon(
+      Dedup.containmentPairsOver(Dedup.digestFamilies(docs), 0.6, maxShingleDf = 10))
+    val fromMembers = canon(
+      Dedup.containmentPairsOver(Dedup.identityFamilies(docs), 0.6, maxShingleDf = 10))
     assert(fromDigest == fromMembers,
       s"only digest: ${fromDigest -- fromMembers}\n only members: ${fromMembers -- fromDigest}")
     // within-family pairs at containment 1.0 both directions
@@ -159,9 +168,11 @@ class DedupGuardSpec extends SparkSpec {
   test("digest-first capped mode on the planted fixture equals member-level " +
        "(the x2b contract: hot family contributes nothing)") {
     val planted = Dedup.plantedHotCorpus(Tables.documents(spark, sf0001))
-    val fromDigest = Dedup.jaccardPairsDigestFirst(planted, 0.5, maxShingleDf = 100)
+    val fromDigest = Dedup.jaccardPairsOver(Dedup.digestFamilies(planted), 0.5,
+        maxShingleDf = 100)
       .as[(Long, Long, Double)].collect().toMap2
-    val fromMembers = Dedup.jaccardPairsMembers(planted, 0.5, maxShingleDf = 100)
+    val fromMembers = Dedup.jaccardPairsOver(Dedup.identityFamilies(planted), 0.5,
+        maxShingleDf = 100)
       .as[(Long, Long, Double)].collect().toMap2
     assert(fromDigest == fromMembers)
     assert(!fromDigest.keys.exists { case (a, b) =>
@@ -173,15 +184,14 @@ class DedupGuardSpec extends SparkSpec {
        "planted family and bounds candidate rows") {
     val docs = Tables.documents(spark, sf0001)
     val planted = Dedup.plantedHotCorpus(docs)
-    val ds = Dedup.distinctShingleHashes(planted)
+    val fams = Dedup.identityFamilies(planted)
     // the 201-member identical family alone contributes C(201,2) uncapped
     // candidate pairs; the cap must remove all of them, leaving no more
     // candidates than the clean corpus generates on its own
     val famPairs = 201L * 200 / 2
-    val uncapped = Dedup.prefixCandidates(ds, 0.5).count()
-    val capped = Dedup.prefixCandidates(ds, 0.5, maxShingleDf = 100).count()
-    val clean = Dedup.prefixCandidates(
-      Dedup.distinctShingleHashes(docs), 0.5).count()
+    val uncapped = Dedup.prefixCandidates(fams, 0.5).count()
+    val capped = Dedup.prefixCandidates(fams, 0.5, maxShingleDf = 100).count()
+    val clean = Dedup.prefixCandidates(Dedup.identityFamilies(docs), 0.5).count()
     assert(uncapped >= famPairs, s"family must dominate uncapped: $uncapped")
     assert(capped <= clean,
       s"capped candidates ($capped) must not exceed the clean corpus's ($clean)")
@@ -297,13 +307,51 @@ class DedupGuardSpec extends SparkSpec {
         s"missing=${naive.diff(prefix).take(3)} extra=${prefix.diff(naive).take(3)}")
     }
     // and the prefix index is genuinely smaller than the full index at t>0
-    val ds = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), graft.functions.TextFns.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(Dedup.shinglesFromTokens(col("toks"))).as("sh"))
-      .select(col("doc_id"), Dedup.md5Long60(col("sh")).as("h60")).distinct()
-    val full = Dedup.prefixCandidates(ds, 0.0).count()
-    val pruned = Dedup.prefixCandidates(ds, 0.8).count()
+    val fams = Dedup.identityFamilies(Tables.documents(spark, sf0001))
+    val full = Dedup.prefixCandidates(fams, 0.0).count()
+    val pruned = Dedup.prefixCandidates(fams, 0.8).count()
     assert(pruned < full, s"prefix at t=0.8 must prune candidates: $pruned vs $full")
+  }
+
+  /** The naive containment reference, independent of the prefix/verify
+    * core both families share: one `h60` self-join aggregates |∩| per
+    * co-shingled pair — the shape the DuckDB oracle runs.
+    */
+  private def containmentPairsNaive(docs: DataFrame, threshold: Double): DataFrame = {
+    val ds = Dedup.distinctShingleHashes(docs)
+    val sizes = ds.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    ds.select(col("doc_id").as("id1"), col("h60"))
+      .join(ds.select(col("doc_id").as("id2"), col("h60")), "h60")
+      .where(col("id1") < col("id2"))
+      .groupBy("id1", "id2").agg(count(lit(1)).as("inter"))
+      .join(sizes.select(col("doc_id").as("id1"), col("n").as("s1")), "id1")
+      .join(sizes.select(col("doc_id").as("id2"), col("n").as("s2")), "id2")
+      .select(col("id1"), col("id2"), col("s1"), col("s2"),
+        round(col("inter").cast("double") / col("s1"), 6).as("c1"),
+        round(col("inter").cast("double") / col("s2"), 6).as("c2"),
+        round(col("inter").cast("double") / least(col("s1"), col("s2")), 6)
+          .as("containment"))
+      .where(col("containment") >= threshold)
+  }
+
+  test("prefix-filtered containment equals the naive single-join form at every threshold") {
+    // the digest/identity equality specs compare one builder with itself;
+    // this pins the shared candidate + verify core to an independent
+    // reference (the family fixture dispatches digest-first)
+    val corpora = Seq(
+      Tables.documents(spark, sf0001),
+      hotShingleDocs,
+      sampleDocs,
+      subsumedFamilyDocs)
+    assert(Dedup.digestArmUncapped(subsumedFamilyDocs))
+    def rows(df: DataFrame) =
+      df.as[(Long, Long, Long, Long, Double, Double, Double)].collect().sorted.toSeq
+    for (docs <- corpora; t <- Seq(0.3, 0.6, 0.9)) {
+      val naive = rows(containmentPairsNaive(docs, t))
+      val prefix = rows(Dedup.containmentPairs(docs, t))
+      assert(prefix == naive, s"divergence at t=$t: " +
+        s"missing=${naive.diff(prefix).take(3)} extra=${prefix.diff(naive).take(3)}")
+    }
   }
 
   /** A 30-copy identical-document family (every LSH band / SimHash chunk
@@ -364,7 +412,7 @@ class DedupGuardSpec extends SparkSpec {
     val docs = lshArmDocs
     def run(f: => DataFrame): Set[(Long, Long, Double)] =
       f.as[(Long, Long, Double)].collect().toSet
-    val members = run(Dedup.minhashLshPairsMembers(docs, 0.5, 0))
+    val members = run(Dedup.lshPairsOver(Dedup.identityFamilies(docs), 0.5, 0))
     // the fixture must actually exercise cross-family rep expansion: the
     // near-dup neighbor pairs with EVERY family member at member level
     assert((0 until 10).forall(i => members.exists {
@@ -372,11 +420,11 @@ class DedupGuardSpec extends SparkSpec {
     }), s"near-dup must pair with all family members, got $members")
     assert(members.contains((80L, 81L, 1.0)),
       "empty twins shingle to the whole text and pair at est 1.0")
-    assert(run(Dedup.minhashLshPairsDigestFirst(docs, 0.5, 0)) == members,
+    assert(run(Dedup.lshPairsOver(Dedup.digestFamilies(docs), 0.5, 0)) == members,
       "uncapped: digest-first output must equal member-level exactly")
     for (cap <- Seq(5, 15)) {
-      val capM = run(Dedup.minhashLshPairsMembers(docs, 0.5, cap))
-      assert(run(Dedup.minhashLshPairsDigestFirst(docs, 0.5, cap)) == capM,
+      val capM = run(Dedup.lshPairsOver(Dedup.identityFamilies(docs), 0.5, cap))
+      assert(run(Dedup.lshPairsOver(Dedup.digestFamilies(docs), 0.5, cap)) == capM,
         s"capped at $cap: member-weighted drop set must reproduce capBuckets'")
     }
     // the dup-mass probe routes this family-heavy corpus to the digest arm
